@@ -242,21 +242,22 @@ def check_queries(con, run, data):
 
 
 def check(workload, run, data, result):
-    """(failed operations, whether the checks ran, notes)"""
-    if result["failed"] and workload != "balance_queries":
-        return 0, True, []  # the one operation, or the whole replay, failed already
+    """(failed operations, whether the checks ran, notes). Operations the
+    JVM already counted as failed are not checked again."""
     con = duckdb.connect()
-    con.execute("SET threads = 2")
+    con.execute("SET threads = 4")  # the benchmark JVM has exited
     try:
-        if workload == "balance_queries":
+        failed, notes = 0, []
+        if workload in ("daily_batch", "balance_queries"):
             failed, notes = check_queries(con, run, data)
-        else:
+        if workload == "daily_batch" and not result["pipeline_failed"]:
             ledger(con, data)
-            if workload == "daily_batch":
-                failed, notes = check_daily(con, run, data)
-            else:
-                notes = matched_ledger_checks(con, f"{run}/replay_ledger.parquet")
-                failed = result["attempted"] if notes else 0
+            f, n = check_daily(con, run, data)
+            failed, notes = failed + f, notes + n
+        if workload == "ledger_replay" and not result["failed"]:
+            ledger(con, data)
+            notes = matched_ledger_checks(con, f"{run}/replay_ledger.parquet")
+            failed = result["attempted"] if notes else 0
         return failed, True, notes
     except (duckdb.Error, OSError, KeyError, ValueError) as e:
         return result["attempted"], False, [f"checker could not run: {e}"]

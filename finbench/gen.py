@@ -24,47 +24,45 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# The ledger follows the events table of the sf0.1 test data set (100,000
+# rows), measured in DuckDB (see README.md, "Inputs"):
+#  - 1,500 customers, each row's customer drawn uniformly: 45-99 rows per
+#    customer, median 66, standard deviation 8.2 (binomial);
+#  - the five event types drawn uniformly, 19.8-20.3 % each;
+#  - timestamps uniform over 30 days from 2024-01-01 (3,205-3,471 rows a day);
+#  - event ids 0..n-1 in timestamp order;
+#  - values exponential with mean 50 in cents: measured quantiles 0.53, 5.35,
+#    14.64, 34.77, 68.9, 114.3, 228.1 at 1/10/25/50/75/90/99 %, the same for
+#    every event type;
+#  - props '{"k": <0..99>}'.
 ROWS = 100_000          # ledger rows
 CUSTOMERS = 1_500
-ZIPF_S = 0.8            # per-customer activity ~ rank^-s: top customer ~6% of rows
-SPAN_DAYS = 90
+SPAN_DAYS = 30
 START_US = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC in microseconds
-# feed event types and their share; purchase -> spent, error -> expired,
-# the rest -> earned (Tables.transactions)
+MEAN_VALUE = 50.0
+# feed event types, drawn with equal shares; purchase -> spent,
+# error -> expired, the rest -> earned (Tables.transactions)
 EVENT_TYPES = ["signup", "click", "view", "purchase", "error"]
-EVENT_P = [0.2, 0.2, 0.2, 0.2, 0.2]
 QUERY_ROUNDS = 64       # parameter rounds drawn; the benchmark cycles through them
 WARMUP_ROUNDS = 1
 
 
-def activity_counts():
-    """Rows per activity rank: deterministic, heavy-tailed, sums to ROWS."""
-    w = np.arange(1, CUSTOMERS + 1, dtype=np.float64) ** -ZIPF_S
-    c = np.maximum(2, np.floor(ROWS * w / w.sum())).astype(np.int64)
-    c[0] += ROWS - c.sum()
-    return c
-
-
 def ledger(rng):
-    counts = activity_counts()
-    # which customer holds which activity rank is the seed's choice
-    user_ids = 100_000 + rng.permutation(CUSTOMERS)
-    user = np.repeat(user_ids, counts)
-    n = len(user)
-    ts_us = START_US + rng.integers(0, SPAN_DAYS * 86_400_000_000, n)
-    etype = rng.choice(len(EVENT_TYPES), n, p=EVENT_P)
-    value = rng.integers(100, 10_001, n) / 100.0
-    # same-width ids, so their string order (the matcher's tie-break) is
-    # their numeric order
-    event_id = 1_000_000 + rng.permutation(n)
+    n = ROWS
+    ts_us = np.sort(START_US + rng.integers(0, SPAN_DAYS * 86_400_000_000, n))
+    user = rng.integers(0, CUSTOMERS, n)
+    etype = rng.integers(0, len(EVENT_TYPES), n)
+    value = np.round(rng.exponential(MEAN_VALUE, n), 2)
+    props = rng.integers(0, 100, n)
+    # written in a seeded order, not in event-id order
     order = rng.permutation(n)
     return pa.table({
-        "event_id": pa.array(event_id[order], pa.int64()),
+        "event_id": pa.array(order, pa.int64()),
         "ts": pa.array(ts_us[order] * 1000, pa.timestamp("ns")),
         "user_id": pa.array(user[order], pa.int64()),
         "event_type": pa.array(np.array(EVENT_TYPES)[etype[order]].tolist(), pa.string()),
         "value": pa.array(value[order], pa.float64()),
-        "props": pa.array(["{}"] * n, pa.string()),
+        "props": pa.array([f'{{"k": {k}}}' for k in props[order]], pa.string()),
     })
 
 

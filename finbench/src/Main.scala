@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import org.json4s._
-import org.json4s.jackson.JsonMethods
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 import graft.operators.{BalanceAnalytics, FifoMatcher, MatchedTx, Validators}
 import graft.pipeline.ThrivePipeline
@@ -32,13 +32,26 @@ import graft.streaming.StreamingFifo
 object Main {
   /** replay chunks: one trigger each */
   val ReplayChunks = 40
-  /** query rounds (12 queries each) that make up `run_s` and the latencies */
+  /** timed query rounds (12 queries each) after the pipeline run in
+    * `daily_batch`, and in `balance_queries` (the latencies; `run_s` there) */
+  val DailyQueryRounds = 2
   val QueryRounds = 9
   val ExecutionDate = "20240401"
   val QueryNames: Seq[String] = (1 to 12).map(i => s"q$i")
 
-  def fmtTs(t: java.time.LocalDateTime): String =
-    t.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS"))
+  private val tsFormat = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+
+  /** The benchmark's own artifacts as JSON (json4s, which Spark ships). */
+  def json(v: Map[String, Any]): String = Serialization.write(v)(DefaultFormats)
+
+  /** A result cell as JSON sees it: timestamps and dates as strings. */
+  def cell(v: Any): Any = v match {
+    case t: java.time.LocalDateTime => t.format(tsFormat)
+    case t: java.sql.Timestamp => t.toLocalDateTime.format(tsFormat)
+    case d: java.time.LocalDate => d.toString
+    case d: java.sql.Date => d.toString
+    case other => other
+  }
 
   val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime
 
@@ -56,9 +69,11 @@ object Main {
       s(math.max(0, math.ceil(p * s.size).toInt - 1))
     }
 
-  /** what a workload hands back: operations, JVM-side failures, metrics */
+  /** what a workload hands back: operations, JVM-side failures, metrics;
+    * `pipelineFailed` tells the checker to skip the deliverables */
   final case class Outcome(attempted: Long, failed: Long, errors: Seq[String],
-      metrics: Map[String, Double], layers: Map[String, Double] = Map.empty)
+      metrics: Map[String, Double], layers: Map[String, Double] = Map.empty,
+      pipelineFailed: Boolean = false)
 
   def main(args: Array[String]): Unit = {
     // halt rather than return: the run directory is thrown away after the
@@ -93,10 +108,14 @@ object Main {
       case other => sys.error(s"unknown workload $other")
     }
     val metrics = out.metrics + ("peak_rss_mb" -> peakRssMb())
-    val layers = tracer.map(t => w.engineLayers(t) ++ out.layers).getOrElse(Map.empty)
-    Files.writeString(Paths.get(s"$run/jvm_result.json"), Json(Map(
+    val layers = tracer.map { t =>
+      val engine = w.engineLayers(t)
+      w.writeTrace(t, opt("workload"))
+      engine ++ out.layers
+    }.getOrElse(Map.empty)
+    Files.writeString(Paths.get(s"$run/jvm_result.json"), json(Map(
       "attempted" -> out.attempted, "failed" -> out.failed, "errors" -> out.errors,
-      "metrics" -> metrics, "layers" -> layers)))
+      "pipeline_failed" -> out.pipelineFailed, "metrics" -> metrics, "layers" -> layers)))
   }
 }
 
@@ -109,14 +128,14 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
     case None => f
   }
 
-  private var rootSpan = "none"
+  private val rootSpans = scala.collection.mutable.Set.empty[String]
   private var rootCodegenMs = 0.0
 
-  /** The workload's timed calls: engine-wide counts cover this span only. */
+  /** The workload's timed calls: engine-wide counts cover these spans only. */
   private def root[T](name: String)(f: => T): T = {
-    rootSpan = name
+    rootSpans += name
     val c0 = codegenMs()
-    try span(name)(f) finally rootCodegenMs = codegenMs() - c0
+    try span(name)(f) finally rootCodegenMs += codegenMs() - c0
   }
 
   private def codegenMs(): Double = {
@@ -128,7 +147,7 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
   /** engine-wide counts over the workload's timed calls, plus JVM totals */
   def engineLayers(t: Tracer): Map[String, Double] = {
     t.flush()
-    val c = t.countsOf(t.subtree(_.name == rootSpan))
+    val c = t.countsOf(t.subtree(s => rootSpans(s.name)))
     val gcMs = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     Map(
       "spark.jobs" -> c.jobs.toDouble, "spark.stages" -> c.stages.toDouble,
@@ -141,9 +160,14 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
       "jvm.jit_ms" -> ManagementFactory.getCompilationMXBean.getTotalCompilationTime.toDouble)
   }
 
-  private def traceFile(t: Tracer, origin: Long, extra: Map[String, Any]): Unit =
-    Files.writeString(Paths.get(s"$run/trace.json"),
-      Json(Map("run_id" -> t.runId, "spans" -> t.spansJson(origin)) ++ extra))
+  /** what the trace file holds beside the spans */
+  private var traceExtra = Map.empty[String, Any]
+
+  def writeTrace(t: Tracer, workload: String): Unit = {
+    val origin = t.spans.find(s => rootSpans(s.name)).map(_.start).getOrElse(0L)
+    Files.writeString(Paths.get(s"$run/trace.json"), json(Map("run_id" -> t.runId,
+      "workload" -> workload, "spans" -> t.spansJson(origin)) ++ traceExtra))
+  }
 
   private def dirStats(dir: String): (Long, Long) = {
     val s = Files.walk(Paths.get(dir))
@@ -158,23 +182,31 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
 
   // ---------------------------------------------------------------- daily_batch
 
-  /** one operation: its latency is the run, its rate the ledger rows per second */
-  private def dailyMetrics(setup: Double, runS: Double, rows: Long): Map[String, Double] =
-    Map("setup_s" -> setup, "run_s" -> runS, "latency_p50_ms" -> runS * 1000,
-      "latency_p90_ms" -> runS * 1000, "rows_per_s" -> rows / runS)
-
+  /** The pipeline run (one operation, cold), then the analysts' queries over
+    * the day's balances in the same process: `run_s` and `rows_per_s` are the
+    * run's, the latencies the queries'. */
   def dailyBatch(): Outcome = {
     val cfg = ThrivePipeline.Config(s"$run/staging", s"$run/out", ExecutionDate)
-    tracer match {
+    val (setup, runS, rows, errs, layers) = tracer match {
       case None =>
         val setup = sinceJvmStart()
         val t0 = System.nanoTime()
-        val report = ThrivePipeline.run(spark, data, cfg)
-        val runS = (System.nanoTime() - t0) / 1e9
-        val errs = if (report.status == "success") Nil else report.validationErrors
-        Outcome(1, if (errs.isEmpty) 0 else 1, errs, dailyMetrics(setup, runS, report.totalTransactions))
+        val (rows, errs) =
+          try {
+            val report = ThrivePipeline.run(spark, data, cfg)
+            (report.totalTransactions,
+              if (report.status == "success") Nil else report.validationErrors)
+          } catch { case e: Exception => (0L, Seq(s"ThrivePipeline.run: $e")) }
+        (setup, (System.nanoTime() - t0) / 1e9, rows, errs, Map.empty[String, Double])
       case Some(t) => dailyBatchTraced(t, cfg)
     }
+    val mix = new QueryMix
+    mix.warmUp()
+    val q = mix.timedRounds("queries", DailyQueryRounds, 0)
+    Outcome(1 + q.done.size, (if (errs.isEmpty) 0 else 1) + q.failed, errs ++ q.errors,
+      Map("setup_s" -> setup, "run_s" -> runS, "latency_p50_ms" -> q.p50,
+        "rows_per_s" -> rows / runS),
+      layers ++ q.layers, pipelineFailed = errs.nonEmpty)
   }
 
   /** The calls `ThrivePipeline.run` makes, in its order, each inside a span.
@@ -183,7 +215,8 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
     * writes read the cache. The program's own run follows on the same
     * inputs; its `RunReport` must agree and its stages are recorded beside
     * the spans. */
-  private def dailyBatchTraced(t: Tracer, cfg: ThrivePipeline.Config): Outcome = {
+  private def dailyBatchTraced(t: Tracer, cfg: ThrivePipeline.Config)
+      : (Double, Double, Long, Seq[String], Map[String, Double]) = {
     val mine = cfg.copy(stagingDir = s"$run/staging_trace", outputDir = s"$run/out_trace")
     val setup = sinceJvmStart()
     val origin = System.nanoTime()
@@ -243,8 +276,8 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
       }
       t.span("sink.report") {
         Files.writeString(Paths.get(s"${mine.outputDir}/analytics_report.json"),
-          Json(Map("summary" -> s.getValuesMap[Any](s.schema.fieldNames.toSeq),
-            "top" -> top.map(_.toSeq))))
+          json(Map("summary" -> s.getValuesMap[Any](s.schema.fieldNames.toSeq).view.mapValues(cell).toMap,
+            "top" -> top.map(_.toSeq.map(cell)))))
       }
       history.unpersist()
       matched.unpersist()
@@ -281,10 +314,10 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
       "pipeline.sink_s" -> t.seconds(_.name.startsWith("sink.")),
       "pipeline.bytes_written" -> bytes.toDouble,
       "pipeline.files_written" -> files.toDouble)
-    traceFile(t, origin, Map("workload" -> "daily_batch", "traced_run_s" -> runS,
+    traceExtra = Map("traced_run_s" -> runS,
       "program_stages" -> report.stages.map(s =>
-        Map("stage" -> s.stage, "rows" -> s.rows, "seconds" -> s.seconds))))
-    Outcome(1, if (errs.isEmpty) 0 else 1, errs, dailyMetrics(setup, runS, rows), layers)
+        Map("stage" -> s.stage, "rows" -> s.rows, "seconds" -> s.seconds)))
+    (setup, runS, rows, errs, layers)
   }
 
   // -------------------------------------------------------------- ledger_replay
@@ -315,7 +348,6 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
     val metrics = Map(
       "setup_s" -> setup, "run_s" -> runS,
       "latency_p50_ms" -> quantile(trig, 0.5),
-      "latency_p90_ms" -> quantile(trig, 0.9),
       "rows_per_s" -> (if (trig.isEmpty) 0.0 else inputRows / (trig.sum / 1000.0)))
     val layers = tracer.map { t =>
       t.flush()
@@ -330,13 +362,12 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
       t.addSpan("replay.stage", root.id, t0, ns(firstMs))
       t.addSpan("replay.triggers", root.id, ns(firstMs), ns(lastEndMs))
       t.addSpan("replay.readback", root.id, ns(lastEndMs), root.end)
-      traceFile(t, t0, Map("workload" -> "ledger_replay",
-        "traced_run_s" -> runS,
+      traceExtra = Map("traced_run_s" -> runS,
         "triggers" -> progress.map(p => Map("batch" -> p.batchId, "rows" -> p.numInputRows,
           "duration_ms" -> p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap,
           "state" -> p.stateOperators.map(o => Map("rows" -> o.numRowsTotal,
             "commit_ms" -> o.commitTimeMs, "memory_bytes" -> o.memoryUsedBytes,
-            "partitions" -> o.numShufflePartitions))))))
+            "partitions" -> o.numShufflePartitions)))))
       Map(
         "replay.stage_s" -> (firstMs - callMs) / 1000.0,
         "replay.readback_s" -> (endMs - lastEndMs) / 1000.0,
@@ -359,17 +390,34 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
 
   private implicit val formats: Formats = DefaultFormats
 
-  def balanceQueries(): Outcome = {
+  final case class Done(round: Int, q: String, ms: Double, planMs: Double,
+      rows: Seq[Seq[Any]], err: Option[String])
+
+  /** What the timed rounds of a [[QueryMix]] hand back. */
+  final case class Queries(done: Seq[Done], fixedRounds: Int, seconds: Double,
+      layers: Map[String, Double]) {
+    /** the first `fixedRounds` rounds: the latencies, and `seconds` */
+    val timed: Seq[Done] = done.filter(_.round < fixedRounds)
+    def p50: Double = quantile(timed.map(_.ms), 0.5)
+    def p90: Double = quantile(timed.map(_.ms), 0.9)
+    def failed: Long = done.count(_.err.nonEmpty).toLong
+    def errors: Seq[String] = done.flatMap(_.err)
+  }
+
+  /** The analysts' traffic: Q1-Q12 through `BalanceQueries`, each query in
+    * turn, over the generator's history and current-balances tables, with
+    * fresh customers and as-of dates per round from the seed's parameters.
+    * Every answer goes to `queries.jsonl` for the checker. */
+  final class QueryMix {
     val history = spark.read.parquet(s"$data/history.parquet")
     val current = spark.read.parquet(s"$data/current.parquet")
     checkSchemas(history, current)
-    val tableRows = Map("history" -> history.count(), "current" -> current.count())
-    def rowsRead(q: String) = tableRows(if (q == "q2" || q == "q12") "current" else "history")
-    val params = JsonMethods.parse(new String(Files.readAllBytes(Paths.get(s"$data/params.json")), "UTF-8"))
-    val JArray(warmup) = params \ "warmup"
-    val JArray(rounds) = params \ "rounds"
+    private val params =
+      JsonMethods.parse(new String(Files.readAllBytes(Paths.get(s"$data/params.json")), "UTF-8"))
+    private val JArray(warmup) = params \ "warmup"
+    private val JArray(rounds) = params \ "rounds"
 
-    def build(q: String, p: JValue): DataFrame = {
+    private def build(q: String, p: JValue): DataFrame = {
       def s(k: String) = (p \ k).extract[String]
       q match {
         case "q1" => BalanceQueries.q1BalanceAsOf(history, (p \ "customers").extract[Seq[String]], s("as_of"))
@@ -386,9 +434,8 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
         case "q12" => BalanceQueries.q12NeverSpent(current)
       }
     }
-    final case class Done(round: Int, q: String, ms: Double, planMs: Double,
-        rows: Seq[Seq[Any]], err: Option[String])
-    def one(round: Int, q: String, p: JValue): Done = {
+
+    private def one(round: Int, q: String, p: JValue): Done = {
       val t0 = System.nanoTime()
       try {
         val df = build(q, p)
@@ -396,49 +443,63 @@ final class Workloads(spark: SparkSession, data: String, run: String, seconds: D
         val ms = (System.nanoTime() - t0) / 1e6
         val plan = Seq("analysis", "optimization", "planning")
           .flatMap(df.queryExecution.tracker.phases.get).map(_.durationMs).sum.toDouble
-        Done(round, q, ms, plan, rows.toSeq.map(_.toSeq), None)
+        Done(round, q, ms, plan, rows.toSeq.map(_.toSeq.map(cell)), None)
       } catch {
         case e: Exception => Done(round, q, (System.nanoTime() - t0) / 1e6, 0, Nil, Some(s"$q: $e"))
       }
     }
-    warmup.foreach(p => QueryNames.foreach(q => one(-1, q, p \ q)))
 
-    val setup = sinceJvmStart()
-    val t0 = System.nanoTime()
-    val done = scala.collection.mutable.ArrayBuffer.empty[Done]
-    var fixedS = 0.0
-    root("balance_queries") {
-      var r = 0
-      while (r < QueryRounds || (System.nanoTime() - t0) / 1e9 < seconds) {
-        val p = rounds(r % rounds.size)
-        QueryNames.foreach(q => done += one(r, q, p \ q))
-        r += 1
-        if (r == QueryRounds) fixedS = (System.nanoTime() - t0) / 1e9
+    /** one untimed round, not checked */
+    def warmUp(): Unit = warmup.foreach(p => QueryNames.foreach(q => one(-1, q, p \ q)))
+
+    /** Whole rounds inside root span `name` until `fixedRounds` rounds and
+      * `floorS` seconds have passed. */
+    def timedRounds(name: String, fixedRounds: Int, floorS: Double): Queries = {
+      val t0 = System.nanoTime()
+      val done = scala.collection.mutable.ArrayBuffer.empty[Done]
+      var fixedS = 0.0
+      root(name) {
+        var r = 0
+        while (r < fixedRounds || (System.nanoTime() - t0) / 1e9 < floorS) {
+          val p = rounds(r % rounds.size)
+          QueryNames.foreach(q => done += one(r, q, p \ q))
+          r += 1
+          if (r == fixedRounds) fixedS = (System.nanoTime() - t0) / 1e9
+        }
       }
+      Files.write(Paths.get(s"$run/queries.jsonl"), done.map(d => json(Map(
+        "round" -> d.round, "q" -> d.q, "ms" -> d.ms, "error" -> d.err.orNull, "rows" -> d.rows))).asJava)
+      val out = Queries(done.toSeq, fixedRounds, fixedS, Map.empty)
+      out.copy(layers = tracer.map { t =>
+        t.flush()
+        val rootId = t.spans.find(_.name == name).get.id
+        val per = QueryNames.map(q =>
+          t.countsOf(t.subtree(s => s.name == s"queries.$q" && s.parent == rootId)))
+        val n = done.size.toDouble
+        Map(
+          "queries.plan_ms_p50" -> quantile(out.timed.map(_.planMs), 0.5),
+          "queries.exec_ms_p50" -> quantile(out.timed.map(d => d.ms - d.planMs), 0.5),
+          "queries.jobs_per_query" -> per.map(_.jobs).sum / n,
+          "queries.tasks_per_query" -> per.map(_.tasks).sum / n) ++
+          QueryNames.map(q => f"queries.q${q.drop(1).toInt}%02d_ms" ->
+            quantile(out.timed.filter(_.q == q).map(_.ms), 0.5))
+      }.getOrElse(Map.empty))
     }
-    val timed = done.filter(_.round < QueryRounds)
-    val lat = timed.map(_.ms).toSeq
-    Files.write(Paths.get(s"$run/queries.jsonl"), done.map(d => Json(Map(
-      "round" -> d.round, "q" -> d.q, "ms" -> d.ms, "error" -> d.err, "rows" -> d.rows))).asJava)
-    val layers = tracer.map { t =>
-      t.flush()
-      val root = t.spans.find(_.name == "balance_queries").get.id
-      val per = QueryNames.map(q => t.countsOf(t.subtree(s => s.name == s"queries.$q" && s.parent == root)))
-      val n = done.size.toDouble
-      traceFile(t, t0, Map("workload" -> "balance_queries"))
-      Map(
-        "queries.plan_ms_p50" -> quantile(timed.map(_.planMs).toSeq, 0.5),
-        "queries.exec_ms_p50" -> quantile(timed.map(d => d.ms - d.planMs).toSeq, 0.5),
-        "queries.jobs_per_query" -> per.map(_.jobs).sum / n,
-        "queries.tasks_per_query" -> per.map(_.tasks).sum / n) ++
-        QueryNames.map(q => f"queries.q${q.drop(1).toInt}%02d_ms" ->
-          quantile(timed.filter(_.q == q).map(_.ms).toSeq, 0.5))
-    }.getOrElse(Map.empty)
-    Outcome(done.size, done.count(_.err.nonEmpty), done.flatMap(_.err).toSeq,
-      Map("setup_s" -> setup, "run_s" -> fixedS,
-        "latency_p50_ms" -> quantile(lat, 0.5), "latency_p90_ms" -> quantile(lat, 0.9),
-        "rows_per_s" -> timed.map(d => rowsRead(d.q)).sum / fixedS),
-      layers)
+  }
+
+  /** One client in a closed loop in a fresh process: a warm-up round in
+    * setup, then whole rounds until QueryRounds rounds and `seconds`. */
+  def balanceQueries(): Outcome = {
+    val mix = new QueryMix
+    val tableRows = Map("history" -> mix.history.count(), "current" -> mix.current.count())
+    mix.warmUp()
+    val setup = sinceJvmStart()
+    val q = mix.timedRounds("balance_queries", QueryRounds, seconds)
+    def rowsRead(name: String) = tableRows(if (name == "q2" || name == "q12") "current" else "history")
+    Outcome(q.done.size, q.failed, q.errors,
+      Map("setup_s" -> setup, "run_s" -> q.seconds, "latency_p50_ms" -> q.p50,
+        "latency_p90_ms" -> q.p90, "rows_per_s" -> q.timed.map(d => rowsRead(d.q)).sum / q.seconds),
+      q.layers)
   }
 
   /** The generated tables must have exactly the columns and types the

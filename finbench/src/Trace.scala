@@ -6,45 +6,6 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
-/** Minimal JSON writer for the benchmark's own artifacts (numbers, strings,
-  * nulls, booleans, sequences and string-keyed maps). */
-object Json {
-  def apply(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => apply(x)
-    case s: String => quote(s)
-    case b: Boolean => b.toString
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case f: Float => apply(f.toDouble)
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case n: java.math.BigDecimal => n.toPlainString
-    case t: java.time.LocalDateTime => quote(Main.fmtTs(t))
-    case t: java.sql.Timestamp => quote(Main.fmtTs(t.toLocalDateTime))
-    case d: java.time.LocalDate => quote(d.toString)
-    case d: java.sql.Date => quote(d.toString)
-    case m: collection.Map[_, _] =>
-      m.map { case (k, x) => quote(k.toString) + ": " + apply(x) }.mkString("{", ", ", "}")
-    case xs: Iterable[_] => xs.map(apply).mkString("[", ", ", "]")
-    case xs: Array[_] => apply(xs.toSeq)
-    case other => quote(other.toString)
-  }
-
-  private def quote(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b ++= "\\\""
-      case '\\' => b ++= "\\\\"
-      case '\n' => b ++= "\\n"
-      case '\r' => b ++= "\\r"
-      case '\t' => b ++= "\\t"
-      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
-      case c => b += c
-    }
-    (b += '"').toString
-  }
-}
-
 /** Per-trigger progress of streaming queries, from Spark's public
   * `StreamingQueryListener`. Used untraced too: the replay's per-trigger
   * latency is `triggerExecution`. Progress events arrive on Spark's own
