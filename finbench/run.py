@@ -58,6 +58,12 @@ PER_LAYER = [
 ] + [f"queries.q{i:02d}_ms" for i in range(1, 13)]
 MASTER_THREADS = 4
 HEAP = "2g"
+# C1 only: a cold JVM under tiered compilation spends about 1.5 cores on C2
+# compiles for the whole run, so its timings follow the machine's spare CPU.
+# C1 alone gets a 48 MiB code cache by default, which daily_batch fills, and
+# flushing it slows the queries that follow; 240 MiB is the tiered default.
+# (See README, "Flags and master".)
+JIT = ["-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=240m"]
 JVM_TIMEOUT_S = 160
 MIN_FREE_BYTES = 1 << 30     # refuse to start with less free space under the run dir
 KEEP_SEEDS = 12              # generated input sets kept in .bench_data
@@ -164,8 +170,9 @@ def launch(root, run, data, a):
     threads = min(MASTER_THREADS, len(os.sched_getaffinity(0)))
     with open(os.path.join(root, ".bench_build", "classpath")) as f:
         cp = os.pathsep.join([os.path.join(root, ".bench_build", "classes"), f.read()])
-    cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-Duser.timezone=UTC",
-            f"-Djava.io.tmpdir={run}/tmp", f"-Dgraft.replay.tmpdir={run}/replay"]
+    cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}"] + JIT
+           + ["-XX:-UsePerfData", "-Duser.timezone=UTC",
+              f"-Djava.io.tmpdir={run}/tmp", f"-Dgraft.replay.tmpdir={run}/replay"]
            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-cp", cp, "finbench.Main", "--workload", a.workload, "--data", data,
               "--run", run, "--master", f"local[{threads}]", "--seconds", str(a.seconds),

@@ -32,6 +32,9 @@ class ProgressLog extends StreamingQueryListener {
   }
 
   def snapshot: Seq[StreamingQueryProgress] = synchronized(progress.toList)
+
+  /** Forget what finished queries reported (the untimed warm-up replay). */
+  def clear(): Unit = synchronized(progress.clear())
 }
 
 /** Spark work attributed to one span: job, stage and task counts plus the
