@@ -45,7 +45,7 @@ class BenchArtifactSpec extends AnyFunSuite {
       """"ann_recall_eval":{"reps":[4.200,8.500,4.100],"median":4.200,"errors":[]}"""), js)
     // the exception list is the BASELINE.md structural-exception table's
     // machine-readable twin — a reader of the artifact sees the contract
-    assert(js.contains(""""budget_exceptions":["streaming_alerts_expiring","_curation_materialize","ann_rebuild_recovery"]"""))
+    assert(js.contains(""""budget_exceptions":["streaming_alerts_expiring","_curation_materialize","ann_rebuild_recovery","_dedup_shared_materialize","_ann_shared_materialize"]"""))
   }
 
   test("a failed cold rep records an error marker, never a timing (ADVICE r14)") {
