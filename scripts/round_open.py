@@ -71,9 +71,12 @@ def main():
               + "\n".join(offenders), file=sys.stderr)
         return 1
 
-    subprocess.check_call(["git", "add", "--"] + [str(p) for p in artifact_files()],
-                          cwd=ROOT)
-    staged = subprocess.run(["git", "diff", "--cached", "--quiet"], cwd=ROOT)
+    paths = [str(p) for p in artifact_files()]
+    subprocess.check_call(["git", "add", "--"] + paths, cwd=ROOT)
+    # diff and commit only the artifact paths: anything else already staged
+    # stays staged and out of this commit
+    staged = subprocess.run(["git", "diff", "--cached", "--quiet", "--"] + paths,
+                            cwd=ROOT)
     if staged.returncode == 0:
         print("round_open: nothing to commit (artifacts already clean + committed)")
         return 0
@@ -82,7 +85,8 @@ def main():
          "Round open: commit driver artifacts redacted\n\n"
          "Mechanical first action of the round (scripts/round_open.py): mask\n"
          "adjudicated mirror-hostname quotes in regenerated artifacts and\n"
-         "commit them so ArtifactRedactionSpec is green at the open commit."],
+         "commit them so ArtifactRedactionSpec is green at the open commit.",
+         "--"] + paths,
         cwd=ROOT)
     return 0
 
