@@ -408,13 +408,21 @@ object Bench {
     val total = materializeSec + curationMaterializeSec +
       dedupSharedMaterializeSec + annSharedMaterializeSec + results.map(_._2).sum
     val warmTotal = warm.map(_._2).sum
+    // the settings that change what a line costs, as the engine ran them
+    // (read after ensureConf, which sets the cached-plan coalescing flag)
+    graft.sources.Tables.ensureConf(spark)
+    def conf(k: String) = jstr(spark.conf.get(k))
     val envJson =
       s"""{"load_before":${jstr(loadBefore)},"load_after":${jstr(loadAfter)},""" +
         s""""load_gate":${jstr(loadGate)},""" +
         s""""load_gate_1m":${sec(gate1m)},"load_gate_5m":${sec(gate5m)},""" +
         s""""warm_gate":${jstr(warmGate)},""" +
         s""""warm_gate_1m":${sec(warmGate1m)},"warm_gate_5m":${sec(warmGate5m)},""" +
-        s""""jvm_cpus":${Runtime.getRuntime.availableProcessors()}}"""
+        s""""jvm_cpus":${Runtime.getRuntime.availableProcessors()},""" +
+        s""""shuffle_partitions":${conf("spark.sql.shuffle.partitions")},""" +
+        s""""aqe":${conf("spark.sql.adaptive.enabled")},""" +
+        s""""cached_plan_coalescing":${conf(graft.sources.Tables.CachedPlanCoalescing)},""" +
+        s""""replay_scratch":${jstr(graft.streaming.FileReplay.scratchBase.toString)}}"""
     // Full per-query detail goes to a file: the driver's artifact keeps only
     // the last ~2000 chars of stdout, so a 70+-entry map printed inline gets
     // cut mid-line and the driver's JSON parse fails (rounds 1-4 all record

@@ -369,16 +369,7 @@ object SparkEntry {
     }),
 
     // report block (reference :518-542) + top-K (A6)
-    "report_summary" -> ((s, d) => {
-      val r = BalanceAnalytics.reportSummary(matched(s, d), current(s, d))
-      r.select(col("total_transactions"),
-        round(col("total_earned"), 2).as("total_earned"),
-        round(col("total_spent"), 2).as("total_spent"),
-        round(col("total_expired"), 2).as("total_expired"),
-        col("matching_records_count"), col("total_customers"),
-        round(col("total_current_balance"), 2).as("total_current_balance"),
-        col("customers_with_positive_balance"))
-    }),
+    "report_summary" -> ((s, d) => BalanceAnalytics.reportSummary(matched(s, d), current(s, d))),
     "top_balances" -> ((s, d) => BalanceAnalytics.topBalances(current(s, d))),
 
     // §2.9 validation surface

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -129,18 +129,21 @@ object BalanceAnalytics {
     * total customers, totals per type, total current balance, count with
     * positive balance. The reference's success-alert reads keys the report
     * never emits (:584-592 vs :525-530); this schema is the unified one
-    * (SURVEY.md §3.1). */
+    * (SURVEY.md §3.1). The money totals are rounded to cents like
+    * [[balanceHistory]]: a float sum's last bits follow the partition
+    * layout, so unrounded totals changed with `spark.sql.shuffle.partitions`. */
   def reportSummary(matched: DataFrame, current: DataFrame): DataFrame = {
+    def cents(c: Column) = round(sum(c), 2)
     val totals = matched.agg(
       count(lit(1)).as("total_transactions"),
-      sum(when(col("TCTYPE") === "earned", col("AMOUNT")).otherwise(0.0)).as("total_earned"),
-      sum(when(col("TCTYPE") === "spent", abs(col("AMOUNT"))).otherwise(0.0)).as("total_spent"),
-      sum(when(col("TCTYPE") === "expired", abs(col("AMOUNT"))).otherwise(0.0)).as("total_expired"),
+      cents(when(col("TCTYPE") === "earned", col("AMOUNT")).otherwise(0.0)).as("total_earned"),
+      cents(when(col("TCTYPE") === "spent", abs(col("AMOUNT"))).otherwise(0.0)).as("total_spent"),
+      cents(when(col("TCTYPE") === "expired", abs(col("AMOUNT"))).otherwise(0.0)).as("total_expired"),
       sum(when(col("TCTYPE") === "earned" && col("REDEEMID").isNotNull, 1L).otherwise(0L))
         .as("matching_records_count"))
     val balances = current.agg(
       count(lit(1)).as("total_customers"),
-      sum(col("current_balance")).as("total_current_balance"),
+      cents(col("current_balance")).as("total_current_balance"),
       sum(when(col("current_balance") > 0, 1L).otherwise(0L)).as("customers_with_positive_balance"))
     totals.crossJoin(balances)
   }

@@ -21,6 +21,10 @@ import graft.sources.Tables
   * materializations are validation error samples (limited) and the one-row
   * report aggregates. Single-file CSV is a deliberate contract cost,
   * isolated here (`coalesce(1)` on final, already-reduced outputs only).
+  * The two persisted stage frames (`matched`, `history`) are sized by AQE
+  * from the bytes seen at run time, not by `spark.sql.shuffle.partitions`
+  * (`Tables.ensureConf` lets AQE coalesce cached plans), so later jobs scan
+  * and the matched parquet deliverable holds a handful of partitions.
   */
 object ThrivePipeline {
 
@@ -173,13 +177,17 @@ object ThrivePipeline {
       return failed(stages.toSeq, sourceErrors.map("source validation: " + _))
 
     // Stage 3 — fifo matching + dual-format sinks (reference :229-286)
-    val matched = stage("fifo_match") {
+    // The matched row count is taken once here and reused by the next two
+    // stage rows: validation only reads `matched`, and the balance history is
+    // a 1:1 projection of it.
+    val (matched, matchedRows) = stage("fifo_match") {
       val m = FifoMatcher.matchTransactions(txns)
         .orderBy("CUSTOMERID", "CREATEDAT", "TRANS_ID")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       writeParquet(m, s"${cfg.outputDir}/tc_data_with_redemptions.parquet")
       writeSingleCsv(m, s"${cfg.outputDir}/tc_data_with_redemptions.csv")
-      (m.count(), m)
+      val n = m.count()
+      (n, (m, n))
     }
 
     // Stage 4 — validate_results: V6-V11 (reference :289-423)
@@ -206,7 +214,7 @@ object ThrivePipeline {
         if (chrono > 0)
           errs += s"chronology violations: $chrono (${sampleIds(chronoDf, "earned_id")})"
       }
-      (matched.count(), errs.toSeq)
+      (matchedRows, errs.toSeq)
     }
     if (resultErrors.nonEmpty) return failed(stages.toSeq, resultErrors)
 
@@ -218,7 +226,7 @@ object ThrivePipeline {
       val c = BalanceAnalytics.currentBalances(h)
       writeSingleCsv(h, s"${cfg.outputDir}/customer_balance_history.csv")
       writeSingleCsv(c, s"${cfg.outputDir}/customer_current_balances.csv")
-      (h.count(), (h, c))
+      (matchedRows, (h, c))
     }
 
     // Stage 6 — report + alert (reference :518-542, :563-598; unified keys).

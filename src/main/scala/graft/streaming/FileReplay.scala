@@ -57,18 +57,19 @@ object FileReplay {
   /** Where replay trees live. A replay's chunks, sink, and checkpoint are
     * EPHEMERAL BY CONSTRUCTION — the root is registered for deletion at
     * the caller's end-of-query drain (or JVM exit), so checkpoint
-    * durability buys nothing here, yet on ext4 every offset-log write,
-    * commit-log write, and state-store delta pays an fsync'd
-    * write-and-rename (measured round-16: walCommit ≈ 45 ms +
-    * commitOffsets ≈ 45 ms per trigger, state commit ≈ 90 ms per
-    * partition — ~30-40% of the ~650 ms per-trigger floor). A RAM-backed
-    * filesystem removes that sync cost without touching semantics: the
-    * oracle gates the SINK CONTENT, not the checkpoint's crash
-    * survivability. Override with `-Dgraft.replay.tmpdir=<path>`; a
-    * production stream — whose checkpoint must outlive the process — sets
-    * a durable path there (this helper is the replay-gate harness, not
-    * the deployment surface). */
-  private[streaming] val scratchBase: Path = {
+    * durability buys nothing here, and a RAM-backed filesystem keeps the
+    * trees off the disk. It does not lift the per-trigger floor (550-650
+    * ms a trigger on a 4-vCPU VM, 310-400 ms of it the state-store commit
+    * of 4 partitions): that floor is not fsync, which costs about 0.4 ms
+    * for a small file on the same VM's disk. Without Hadoop's native
+    * library, Hadoop's local file system starts a `chmod` or `readlink`
+    * child process for the checkpoint, state-store and sink files, about
+    * 60 a trigger, on any local path, `/dev/shm` included. Override with
+    * `-Dgraft.replay.tmpdir=<path>`; a production stream — whose
+    * checkpoint must outlive the process — sets a durable path there
+    * (this helper is the replay-gate harness, not the deployment
+    * surface). */
+  private[graft] val scratchBase: Path = {
     val shm = Path.of("/dev/shm")
     sys.props.get("graft.replay.tmpdir").map(Path.of(_))
       .orElse(Option(shm).filter(p => Files.isDirectory(p) && Files.isWritable(p)))

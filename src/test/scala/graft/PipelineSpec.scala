@@ -76,6 +76,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(s"$tmp/staging/20260813/transactions.parquet")))
   }
 
+  test("pipeline output is invariant to shuffle partitions and its cached plans are sized by AQE") {
+    // The session is shared by the whole suite: restore its sizing after.
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    def runAt(partitions: Int) = {
+      spark.conf.set(key, partitions.toString)
+      val tmp = Files.createTempDirectory(s"graft-pipeline-p$partitions").toString
+      val report = ThrivePipeline.run(spark, "/root/testdata/sf0.001",
+        ThrivePipeline.Config(s"$tmp/staging", s"$tmp/out", executionDate = "20260812"))
+      val matchedDir = s"$tmp/out/tc_data_with_redemptions.parquet"
+      val rows = spark.read.parquet(matchedDir).collect().map(_.toString).sorted.toSeq
+      val parts = new java.io.File(matchedDir).listFiles().count(_.getName.startsWith("part-"))
+      (report.copy(stages = report.stages.map(_.copy(seconds = 0.0))), rows, parts)
+    }
+    val ((r2, rows2, _), (r200, rows200, parts200)) =
+      try (runAt(2), runAt(200)) finally spark.conf.set(key, prior)
+
+    assert(r2.status === "success")
+    assert(r200 === r2)
+    assert(rows200 === rows2)
+    assert(rows2.size === 1000)
+    // Without AQE coalescing inside the cached `matched` plan, its global
+    // sort keeps every shuffle partition and the write emits one file each.
+    assert(parts200 <= spark.sparkContext.defaultParallelism,
+      s"$parts200 part files at 200 shuffle partitions")
+  }
+
   test("pipeline fails fast on invalid source data") {
     import org.apache.spark.sql.functions._
     val tmp = Files.createTempDirectory("graft-pipeline-bad").toString
