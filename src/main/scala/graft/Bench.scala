@@ -422,7 +422,9 @@ object Bench {
         s""""shuffle_partitions":${conf("spark.sql.shuffle.partitions")},""" +
         s""""aqe":${conf("spark.sql.adaptive.enabled")},""" +
         s""""cached_plan_coalescing":${conf(graft.sources.Tables.CachedPlanCoalescing)},""" +
-        s""""replay_scratch":${jstr(graft.streaming.FileReplay.scratchBase.toString)}}"""
+        s""""replay_scratch":${jstr(graft.streaming.FileReplay.scratchBase.toString)},""" +
+        s""""replay_fs":${jstr(graft.streaming.ReplayFileSystem.Scheme)},""" +
+        s""""checkpoint_manager":${jstr(graft.streaming.FileReplay.CheckpointManager)}}"""
     // Full per-query detail goes to a file: the driver's artifact keeps only
     // the last ~2000 chars of stdout, so a 70+-entry map printed inline gets
     // cut mid-line and the driver's JSON parse fails (rounds 1-4 all record

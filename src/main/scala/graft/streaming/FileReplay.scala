@@ -39,45 +39,52 @@ import org.apache.spark.sql.types.StructType
   * the full replay tree per streaming gate (round-11: 905 stale roots).
   */
 object FileReplay {
+  import ReplayFileSystem.uri
 
   /** One replay's directory layout: `in/` chunk files (what the file
     * source tails), `out/` the parquet sink, `ckpt/` the checkpoint.
     * `tag` separates the sink/checkpoint of queries SHARING one staged
-    * chunk set (the rollup and sessions gates replay the same `in/`). */
+    * chunk set (the rollup and sessions gates replay the same `in/`).
+    * These are local paths, for the helper's own file moves and for
+    * [[graft.RunHygiene]]'s deletes; Spark gets each one as a `graftfs:`
+    * URI ([[ReplayFileSystem.uri]]), so its file calls go through
+    * [[ReplayFileSystem]]. */
   final case class ReplayDirs(root: Path) {
     def in: Path = root.resolve("in")
     def out(tag: String = ""): Path = root.resolve(s"out$tag")
     def ckpt(tag: String = ""): Path = root.resolve(s"ckpt$tag")
   }
 
+  /** The checkpoint manager every replay's stream runs with (pinned by
+    * [[runToParquet]]): Spark's `FileSystem`-based one. Its atomic create
+    * writes a temp file and renames it, which on [[ReplayFileSystem]] is
+    * one `rename(2)`. Spark's default, FileContext-based manager runs a
+    * `readlink` child process per rename without Hadoop's native library,
+    * and it has no FileContext binding for `graftfs:` anyway. */
+  private[graft] val CheckpointManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
   private val epoch = LocalDateTime.of(1970, 1, 1, 0, 0)
   private def micros(t: LocalDateTime): Long = ChronoUnit.MICROS.between(epoch, t)
   private def fromMicros(u: Long): LocalDateTime = epoch.plus(u, ChronoUnit.MICROS)
 
-  /** Where replay trees live. A replay's chunks, sink, and checkpoint are
-    * EPHEMERAL BY CONSTRUCTION — the root is registered for deletion at
-    * the caller's end-of-query drain (or JVM exit), so checkpoint
-    * durability buys nothing here, and a RAM-backed filesystem keeps the
-    * trees off the disk. It does not lift the per-trigger floor (550-650
-    * ms a trigger on a 4-vCPU VM, 310-400 ms of it the state-store commit
-    * of 4 partitions): that floor is not fsync, which costs about 0.4 ms
-    * for a small file on the same VM's disk. Without Hadoop's native
-    * library, Hadoop's local file system starts a `chmod` or `readlink`
-    * child process for the checkpoint, state-store and sink files, about
-    * 60 a trigger, on any local path, `/dev/shm` included. Override with
-    * `-Dgraft.replay.tmpdir=<path>`; a production stream — whose
-    * checkpoint must outlive the process — sets a durable path there
-    * (this helper is the replay-gate harness, not the deployment
-    * surface). */
-  private[graft] val scratchBase: Path = {
-    val shm = Path.of("/dev/shm")
-    sys.props.get("graft.replay.tmpdir").map(Path.of(_))
-      .orElse(Option(shm).filter(p => Files.isDirectory(p) && Files.isWritable(p)))
-      .getOrElse(Path.of(System.getProperty("java.io.tmpdir")))
-  }
+  /** Where replay trees live: `java.io.tmpdir`, or
+    * `-Dgraft.replay.tmpdir=<path>`. A replay's chunks, sink and checkpoint
+    * are EPHEMERAL BY CONSTRUCTION — the root is registered for deletion at
+    * the caller's end-of-query drain (or JVM exit). The device does not
+    * set the per-trigger cost: that floor was Hadoop's child processes (a
+    * `chmod` per created file, a `readlink` per checkpoint rename, on any
+    * local path, RAM-backed or not), which [[ReplayFileSystem]] and the
+    * pinned [[CheckpointManager]] remove. A production stream, whose
+    * checkpoint must outlive the process, sets a durable path here (this
+    * helper is the replay-gate harness, not the deployment surface). */
+  private[graft] val scratchBase: Path =
+    Path.of(sys.props.getOrElse("graft.replay.tmpdir", System.getProperty("java.io.tmpdir")))
 
-  private def newReplayRoot(): Path =
+  private def newReplayRoot(spark: SparkSession): Path = {
+    ReplayFileSystem.register(spark)
     Files.createTempDirectory(scratchBase, "graft_replay_")
+  }
 
   /** Stage `df` (with a TIMESTAMP_NTZ event-time column `tsCol`) into
     * `batches` event-time-range chunk files, appending any `sentinels` as
@@ -90,7 +97,7 @@ object FileReplay {
     // ephemeral (per-call) roots die at the caller's end-of-query drain;
     // session-memoized roots (stagedShared) must survive to later
     // consumers and die only at JVM exit
-    val dirs = ReplayDirs(newReplayRoot())
+    val dirs = ReplayDirs(newReplayRoot(df.sparkSession))
     if (ephemeral) graft.RunHygiene.scratch(df.sparkSession, dirs.root.toString)
     else graft.RunHygiene.scratchAtExit(dirs.root.toString)
     Files.createDirectories(dirs.in)
@@ -144,7 +151,7 @@ object FileReplay {
   def stageChunksDelayed(df: DataFrame, tsCol: String, batches: Int,
       delay: org.apache.spark.sql.Column,
       sentinels: Seq[DataFrame] = Nil): ReplayDirs = {
-    val dirs = ReplayDirs(newReplayRoot())
+    val dirs = ReplayDirs(newReplayRoot(df.sparkSession))
     graft.RunHygiene.scratch(df.sparkSession, dirs.root.toString)
     Files.createDirectories(dirs.in)
     // same staging-window persist as stageChunks: one source scan, not
@@ -189,7 +196,7 @@ object FileReplay {
       batches: Int, in: Path, base: Long): Unit = {
     val stage = in.resolve(".stage_all")
     chunked.repartition(col("_chunk"))
-      .write.partitionBy("_chunk").mode("overwrite").parquet(stage.toString)
+      .write.partitionBy("_chunk").mode("overwrite").parquet(uri(stage))
     var emptyTemplate: Option[Path] = None
     (0 until batches).foreach { k =>
       val dest = in.resolve(f"chunk_$k%05d.parquet")
@@ -217,7 +224,7 @@ object FileReplay {
     * file source's listing never sees the in-flight write. */
   private def writeChunk(c: DataFrame, in: Path, k: Int, base: Long): Unit = {
     val stage = in.resolve(s".stage_$k")
-    c.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    c.coalesce(1).write.mode("overwrite").parquet(uri(stage))
     val part = {
       val s = Files.list(stage)
       try s.filter(p => p.getFileName.toString.startsWith("part-")).findFirst().get()
@@ -231,9 +238,11 @@ object FileReplay {
 
   /** The chunk-replaying stream: one staged file per micro-batch,
     * oldest first. */
-  def stream(spark: SparkSession, schema: StructType, dirs: ReplayDirs): DataFrame =
+  def stream(spark: SparkSession, schema: StructType, dirs: ReplayDirs): DataFrame = {
+    ReplayFileSystem.register(spark)
     spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(dirs.in.toString)
+      .parquet(uri(dirs.in))
+  }
 
   /** Drive `streamed` through a parquet sink until every staged chunk has
     * been processed, then return the batch read-back of the sink — the
@@ -243,29 +252,55 @@ object FileReplay {
     * `spark.sql.shuffle.partitions` at first-batch time and every
     * micro-batch then commits every state partition; at gate scale 32
     * partitions × 5+ batches is pure state-store overhead, so the conf is
-    * pinned to `statePartitions` for the (synchronous) lifetime of the
-    * replay and restored before returning — the read-back frame is planned
-    * by the caller after restore, so only the stream is affected. On a
-    * real deployment the operator runs under the session's own sizing. */
+    * pinned to `statePartitions` while the stream starts ([[withConfs]]):
+    * the stream copies its session's conf at `start()`, and the read-back
+    * frame is planned by the caller after the restore, so only the stream
+    * is affected. The checkpoint manager is pinned to [[CheckpointManager]]
+    * from `start()` through the read-back; a batch query planned meanwhile
+    * uses no checkpoint manager. On a real deployment the operator runs
+    * under the session's own sizing. A second call with the same `dirs`
+    * and `tag` resumes from the checkpoint: it processes only the chunks
+    * added since. */
   def runToParquet(streamed: DataFrame, dirs: ReplayDirs,
       statePartitions: Int = 8, tag: String = ""): DataFrame = {
     val spark = streamed.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
     // session override for the replay state sizing (sweeps, deployments
     // with different core counts); the 8-partition default is the round-14
     // sweep winner for the local gates
     val stateParts = spark.conf.getOption("graft.replay.statePartitions")
       .flatMap(_.toIntOption).getOrElse(statePartitions)
-    val query =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
+    // the manager stays pinned until the read-back: the stream thread opens
+    // the source's log after start() returns, and the read-back opens the
+    // sink's `_spark_metadata` log; unpinned, each first tries Spark's
+    // FileContext manager, which has no `graftfs:` binding (a warning and
+    // a fallback per log)
+    withConfs(spark, "spark.sql.streaming.checkpointFileManagerClass" -> CheckpointManager) {
+      val query = withConfs(spark, "spark.sql.shuffle.partitions" -> stateParts.toString) {
         streamed.writeStream.format("parquet")
-          .option("path", dirs.out(tag).toString)
-          .option("checkpointLocation", dirs.ckpt(tag).toString)
+          .option("path", uri(dirs.out(tag)))
+          .option("checkpointLocation", uri(dirs.ckpt(tag)))
           .outputMode("append").start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try query.processAllAvailable() finally query.stop()
-    spark.read.parquet(dirs.out(tag).toString)
+      }
+      try query.processAllAvailable() finally query.stop()
+      spark.read.parquet(uri(dirs.out(tag)))
+    }
+  }
+
+  /** Run `body` with `confs` set on `spark`, then put every key back as it
+    * was: its previous value, or unset if it had none (so a key the caller
+    * never set does not turn into an explicit default), also when `body`
+    * throws. */
+  private[graft] def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val before = spark.conf.getAll
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally confs.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None    => spark.conf.unset(k)
+      }
+    }
   }
 
   private def deleteRecursively(p: Path): Unit = {
