@@ -96,11 +96,6 @@ object Bench {
   private[graft] def sec(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** The BENCH_FULL.json line — extracted from `main` so BenchArtifactSpec
-    * pins the artifact schema (every key the verdict grades on:
-    * queries/warm_rerun/warm_errors/env/errors/sf) against drift without
-    * running a bench. `timings` includes the `_pipeline_materialize` and
-    * `_curation_materialize` ETL line items. */
   /** Lines whose in-suite cold numbers proved load-order-dependent
     * (round-13 verdict #5: the ann family doubled in the driver run while
     * the committed same-code recording did not — five-rep isolated-cold
@@ -113,7 +108,7 @@ object Bench {
     * line whose in-suite cold exceeds ~5 s, so the whole expensive tail is
     * self-adjudicating. Exempt by construction, with the reason on
     * record rather than a vacuous number:
-    * - the two `_..._materialize` ETL line items are not
+    * - the `_..._materialize` ETL line items are not
     *   `SparkEntry.queries` entries (they time shared staging, not a
     *   re-runnable gate);
     * - `streaming_alerts`, `streaming_alerts_expiring`, and
@@ -154,6 +149,42 @@ object Bench {
     // have breached it under box contention (r15: 12.2 s observed once)
     "_dedup_shared_materialize", "_ann_shared_materialize")
 
+  /** The shared-staging hooks, in run order, each timed as its own line
+    * item before the cold pass. Each fills ETL-once/query-many state that
+    * several gates read; charging it to whichever consumer runs first
+    * would misattribute the whole build to one arbitrary gate.
+    * - pipeline: the matched ledger + balance history (the reference
+    *   parquets them between DAG tasks), filled without the gates' output
+    *   orderBy (a sort computed only to be counted — round-16);
+    * - curation: the canon + C4/containment/PII censuses prefix;
+    * - dedup: the simhash pair graph (seven consumer gates) and the
+    *   LSH-audit exact + banded pair frames (four);
+    * - ann: the seven ranker frames and the Lloyd/PQ quantizer trainings
+    *   behind them, plus the JIT warm-up of the vector-kernel path the
+    *   alphabetical cold pass used to charge to the first ann gate. */
+  private[graft] val MaterializeHooks: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+    "_pipeline_materialize" -> SparkEntry.materializePipelineShared,
+    "_curation_materialize" -> SparkEntry.materializeCurationShared,
+    "_dedup_shared_materialize" -> SparkEntry.materializeDedupShared,
+    "_ann_shared_materialize" -> SparkEntry.materializeAnnShared)
+
+  private def errText(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+
+  /** One timed line: `(name, wall seconds, error)`. A failure comes back
+    * as an explicit error next to its seconds, never as a clean timing (a
+    * broken gate or hook would otherwise bench "fast" and vanish). */
+  private[graft] def timed(name: String)(body: => Any): (String, Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err = try { body; None } catch { case e: Throwable => Some(errText(e)) }
+    (name, (System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** The BENCH_FULL.json line — extracted from `main` so BenchArtifactSpec
+    * pins the artifact schema (every key the verdict grades on:
+    * queries/warm_rerun/warm_errors/env/errors/sf) against drift without
+    * running a bench. `timings` includes the [[MaterializeHooks]] line
+    * items. */
   private[graft] def renderFullJson(timings: Seq[(String, Double)],
       warm: Seq[(String, Double)], warmErrors: Seq[(String, String)],
       errors: Seq[(String, String)], envJson: String, sfDir: String,
@@ -216,57 +247,18 @@ object Bench {
     // whole-stage compiler init) before any timer starts — they belong to
     // the JVM, not to whichever query happens to run first.
     spark.range(0, 1L << 20).selectExpr("sum(id)").collect()
-    // Materialize the shared pipeline stages once, up front, and report that
-    // cost as its own line item: the matched ledger + balance history are
-    // ETL-once/query-many intermediates (the reference parquets them between
-    // DAG tasks), so charging them to whichever query runs first would
-    // misattribute ~all of the pipeline cost to one arbitrary query.
-    val tMat0 = System.nanoTime()
-    // fills the same session persists the two gates read; skips the gates'
-    // output orderBy (a sort computed only to be counted — round-16)
-    try SparkEntry.materializePipelineShared(spark, sfDir)
-    catch { case _: Throwable => }
-    val materializeSec = (System.nanoTime() - tMat0) / 1e9
-    // shared curation prefix (canon + C4/containment/PII censuses):
-    // ETL-once/query-many exactly like the matched ledger above — its own
-    // line item so neither ETL block hides inside the other
-    val tCur0 = System.nanoTime()
-    try SparkEntry.materializeCurationShared(spark, sfDir)
-    catch { case _: Throwable => }
-    val curationMaterializeSec = (System.nanoTime() - tCur0) / 1e9
-    // shared dedup frames (simhash pair graph: seven consumer gates;
-    // LSH-audit exact + banded pair frames: four) — the same
-    // ETL-once/query-many discipline, their own line item
-    val tSim0 = System.nanoTime()
-    try SparkEntry.materializeDedupShared(spark, sfDir)
-    catch { case _: Throwable => }
-    val dedupSharedMaterializeSec = (System.nanoTime() - tSim0) / 1e9
-    // shared ANN ranking frames (seven ranker gates + the recall/fusion
-    // consumers) and the Lloyd/PQ quantizer trainings behind them — same
-    // ETL-once/query-many discipline, own line item (round-16). Also the
-    // JIT warm-up of the vector-kernel/training code path the alphabetical
-    // cold pass used to charge to whichever ann gate ran first.
-    val tAnn0 = System.nanoTime()
-    try SparkEntry.materializeAnnShared(spark, sfDir)
-    catch { case _: Throwable => }
-    val annSharedMaterializeSec = (System.nanoTime() - tAnn0) / 1e9
+    val materialized = MaterializeHooks.map { case (name, hook) =>
+      timed(name)(hook(spark, sfDir)) }
     // session-lived stage caches live in SparkEntry (never registered with
     // RunHygiene); each query's own stage persists drain after its action so
     // 70 queries don't accumulate storage churn
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // a failure must surface as an explicit error entry, never as a
-      // plausible-looking timing (a broken query would otherwise bench
-      // "fast" and vanish)
-      val err = try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
-      val sec = (System.nanoTime() - t0) / 1e9
-      RunHygiene.drainStages(spark)
-      (name, sec, err)
-    }
+        val line = timed(name)(fn(spark, sfDir).count())
+        RunHygiene.drainStages(spark)
+        line
+      }
     // Full-suite warm pass (round-6 verdict #1 extended the 45-query triage
     // to everything): every successful query gets ONE warm re-run and both
     // numbers are emitted. The cold number carries first-touch costs (parquet
@@ -302,7 +294,7 @@ object Bench {
     // regression. Skipped on SPARK_GRAFT_ONLY iteration runs.
     val coldReps: Seq[(String, Seq[Double], Seq[String])] =
       if (only.isDefined) Nil
-      else ColdRepNames.filter(SparkEntry.queries.contains).map { name =>
+      else ColdRepNames.map { name =>
         val times = Seq.newBuilder[Double]
         val errs = Seq.newBuilder[String]
         (1 to 3).foreach { _ =>
@@ -312,9 +304,7 @@ object Bench {
           try {
             SparkEntry.queries(name)(spark, sfDir).count()
             times += (System.nanoTime() - t0) / 1e9
-          } catch { case scala.util.control.NonFatal(e) =>
-            errs += s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
-          }
+          } catch { case scala.util.control.NonFatal(e) => errs += errText(e) }
           RunHygiene.drainStages(spark)
         }
         (name, times.result(), errs.result())
@@ -340,11 +330,8 @@ object Bench {
     val coldByName = results.map(r => r._1 -> r._2).toMap
     val warmDiagBuf = scala.collection.mutable.Buffer.empty[(String, WarmDiag)]
     def timedRun(name: String): (Double, Double, Double, Option[String]) = {
-      val l0 = load1m(); val g0 = gcSec(); val t0 = System.nanoTime()
-      val err = try { SparkEntry.queries(name)(spark, sfDir).count(); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
-      val s = (System.nanoTime() - t0) / 1e9
+      val l0 = load1m(); val g0 = gcSec()
+      val (_, s, err) = timed(name)(SparkEntry.queries(name)(spark, sfDir).count())
       // GC and load sampled BEFORE the drain: stage unpersist + scratch-tree
       // deletion must not pollute the query's own collector evidence
       val gcDelta = gcSec() - g0
@@ -395,18 +382,13 @@ object Bench {
     val warmOver2x = warm.collect {
       case (n, s) if coldByName.get(n).exists(warmOver(_, s)) => n }
     val loadAfter = loadavg()
-    val timings = ("_pipeline_materialize", materializeSec) +:
-      ("_curation_materialize", curationMaterializeSec) +:
-      ("_dedup_shared_materialize", dedupSharedMaterializeSec) +:
-      ("_ann_shared_materialize", annSharedMaterializeSec) +:
-      results.map(r => (r._1, r._2))
-    val errPairs = results.collect { case (n, _, Some(m)) => (n, m) }
+    val timings = (materialized ++ results).map(r => (r._1, r._2))
+    val errPairs = (materialized ++ results).collect { case (n, _, Some(m)) => (n, m) }
     // errors are rare but must never push the line past the tail window:
     // the printed form keeps at most 5 (full set is in the detail file)
     val errsCompact = errPairs.take(5)
       .map { case (n, m) => jstr(n) + ":" + jstr(m.take(120)) }.mkString("{", ",", "}")
-    val total = materializeSec + curationMaterializeSec +
-      dedupSharedMaterializeSec + annSharedMaterializeSec + results.map(_._2).sum
+    val total = timings.map(_._2).sum
     val warmTotal = warm.map(_._2).sum
     // the settings that change what a line costs, as the engine ran them
     // (read after ensureConf, which sets the cached-plan coalescing flag)

@@ -21,7 +21,7 @@ object PlanAudit {
   //  - text_vocab_coverage: the 1-row (n_total, n_vocab) totals cross
   //  - text_source_divergence: the 1-row corpus-total cross
   //  - profile_fk_orphans: one 1-row null-count cross per FK edge
-  private val intentional = Set(
+  private[graft] val intentional = Set(
     "ann_cosine_topk", "embed_neardup_exact", "report_summary",
     "sketch_kmv_distinct", "sketch_hll_distinct", "sketch_hll_merged",
     "text_tfidf_top_terms", "text_unigram_logprob", "curation_pipeline_v2",

@@ -94,7 +94,7 @@ object FifoMatcher {
     * rank window partitions by (CUSTOMERID, side), so ONE whale customer
     * bounds one task — measured at a 19%-of-corpus whale on 20M rows:
     * max rank-window task 5.6 s vs 1.9 s median (2.9×), wall +67%
-    * (WhaleSkewMain; PLANS.md). This variant computes the SAME global
+    * (PLANS.md:26). This variant computes the SAME global
     * per-(customer, side) rank as a two-stage distributed rank:
     *
     *  1. rows bucket by fixed CREATEDAT ranges (one 2-value min/max
@@ -195,8 +195,8 @@ object FifoMatcher {
     }
   }
 
-  /** The sub-split's boundary derivation, extracted so WhaleSkewMain can
-    * measure its driver footprint directly (round-13 verdict #4). Census:
+  /** The sub-split's boundary derivation, extracted so its driver
+    * footprint can be measured directly (round-13 verdict #4; PLANS.md:3596). Census:
     * one map-combinable (customer, side, CREATEDAT) count finds tie runs
     * past a bucket's fair share (heaviest 64). Boundaries: per heavy run,
     * `ntile(buckets)` over a deterministic md5 sample INSIDE the cluster,
@@ -263,7 +263,7 @@ object FifoMatcher {
 
   /** Whale-dispatch threshold: a customer holding more than this share of
     * all rows (in ppm — 50000 = 5%) makes the salted two-stage rank the
-    * cheaper plan. Priced from WhaleSkewMain (PLANS.md): at a 19% whale
+    * cheaper plan. Priced in PLANS.md:3596: at a 19% whale
     * the primary's straggler task costs +67% wall while the salted
     * overhead is a tiny counts aggregate + reused-partitioning join; at
     * balanced data the salted form loses ~40%. The crossover sits where

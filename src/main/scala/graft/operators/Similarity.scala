@@ -1365,7 +1365,7 @@ object Similarity {
     * twin replays both Lloyd chains (raw-L2 build, unit-space rebuild)
     * verbatim.
     *
-    * Parameters are the round-14 sweep winner (RecoverySweepMain over an
+    * Parameters are the round-14 sweep winner (PLANS.md:3566, over an
     * 8-config grid × 4 corpora — sf0.001/0.01/0.1 + stressdata): at
     * nCentroids=16 the magnitude trap is sharp (the smallest-norm cells
     * the collapsed queries probe hold few originals) while nProbe=2 keeps

@@ -129,6 +129,15 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(js.contains(""""errors":{"q9":"AnalysisException: nope"}"""))
   }
 
+  test("a throwing hook is timed as an error under its line name, never as a clean timing") {
+    val (name, secs, err) =
+      Bench.timed("_ann_shared_materialize")(throw new IllegalStateException("boom"))
+    assert(name === "_ann_shared_materialize")
+    assert(secs >= 0.0)
+    assert(err === Some("IllegalStateException: boom"))
+    assert(Bench.timed("q1")(())._3 === None)
+  }
+
   test("strings are JSON-escaped and decimals locale-pinned") {
     val js = Bench.renderFullJson(Seq("q\"x\"" -> 1.0), Nil, Nil,
       Seq("qe" -> "line1\nline2\\end"), env, "sf")

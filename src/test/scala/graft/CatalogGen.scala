@@ -2,8 +2,9 @@ package graft
 
 /** Generates CATALOG.md — the one-command operator catalog (round-12
   * stretch #8): one row per gated query with the operator call it
-  * dispatches to, the operator's definition site, whether a DuckDB oracle
-  * twin gates it, and where PLANS.md discusses it. Everything derives
+  * dispatches to, the operator's definition site, and where PLANS.md
+  * discusses it. Every gate carries its DuckDB twin by construction
+  * (`Gate.oracle`), so there is no oracle column. Everything derives
   * from the SparkEntry registry + a lexical scan of the sources, so the
   * catalog cannot drift silently: CatalogSpec fails `sbt test` whenever
   * the committed file disagrees with a fresh generation.
@@ -19,7 +20,8 @@ object CatalogGen {
 
   /** gate name -> (SparkEntry line, candidate operator expressions) parsed
     * from the registry source: every `Obj.method(` token in the entry's
-    * window, harness symbols excluded — the renderer keeps the first
+    * window after its build lambda's `=>` (so the oracle argument never
+    * counts), harness symbols excluded — the renderer keeps the first
     * candidate that resolves to a `def` in src/main. */
   private val HarnessObjects =
     Set("Tables", "RunHygiene", "Seq", "Map", "Paths", "System", "Files",
@@ -27,7 +29,7 @@ object CatalogGen {
 
   private def registryEntries(src: String): Map[String, (Int, Seq[String])] = {
     val lines = src.split("\n", -1)
-    val entry = """^\s*"([a-z0-9_]+)"\s*->""".r
+    val entry = """^\s*Gate\("([a-z0-9_]+)",""".r
     val names = SparkEntry.queries.keySet
     val call = """((?:graft\.[a-z]+\.)?[A-Z][A-Za-z0-9]*\.[a-z][A-Za-z0-9]*)\s*\(""".r
     var out = Map.empty[String, (Int, Seq[String])]
@@ -39,7 +41,8 @@ object CatalogGen {
             .takeWhile(l => !entry.findFirstMatchIn(l).exists(m =>
               m.group(1) != name && names.contains(m.group(1))))
             .mkString(" ")
-          val ops = call.findAllMatchIn(window).map(_.group(1)).toSeq
+          val build = window.substring(window.indexOf("=>") + 2)
+          val ops = call.findAllMatchIn(build).map(_.group(1)).toSeq
             .filterNot(op => HarnessObjects.contains(
               op.stripPrefix("graft.").split("\\.").takeRight(2).head))
             .distinct
@@ -97,16 +100,15 @@ object CatalogGen {
     val reg = registryEntries(read("src/main/scala/graft/SparkEntry.scala"))
     val sites = defSites()
     val plans = plansLines()
-    val oracles = SparkEntry.oracleSql.keySet
     val sb = new StringBuilder
     sb.append("# Operator catalog\n\n")
     sb.append("GENERATED — do not edit by hand; regenerate with\n")
     sb.append("`sbt \"Test/runMain graft.CatalogGen\"` (CatalogSpec pins sync).\n\n")
-    sb.append(s"${SparkEntry.queries.size} gated queries. Every row is " +
-      "oracle-gated (DuckDB twin, exact hash) unless marked otherwise; " +
+    sb.append(s"${SparkEntry.queries.size} gated queries. Every gate is " +
+      "oracle-gated (DuckDB twin, exact hash); " +
       "`plans` is the first PLANS.md line discussing the gate.\n\n")
-    sb.append("| gate | operator | defined at | registry | oracle | plans |\n")
-    sb.append("|---|---|---|---|---|---|\n")
+    sb.append("| gate | operator | defined at | registry | plans |\n")
+    sb.append("|---|---|---|---|---|\n")
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       val (regLine, candidates) = reg.getOrElse(name, (0, Nil))
       // the first candidate call resolving to a def in src/main is the
@@ -114,9 +116,8 @@ object CatalogGen {
       val resolved = candidates.iterator
         .map(op => op -> sites.getOrElse(op, "—")).find(_._2 != "—")
       val (op, site) = resolved.getOrElse(("(inline)", "SparkEntry.scala"))
-      val oracle = if (oracles.contains(name)) "yes" else "NO"
       val pl = plans.get(name).map(l => s"PLANS.md:$l").getOrElse("—")
-      sb.append(s"| `$name` | `$op` | $site | SparkEntry.scala:$regLine | $oracle | $pl |\n")
+      sb.append(s"| `$name` | `$op` | $site | SparkEntry.scala:$regLine | $pl |\n")
     }
     sb.toString
   }

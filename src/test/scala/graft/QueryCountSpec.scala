@@ -2,27 +2,31 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the gated-query count so README.md can't drift from the registry
-  * (round-6 verdict item #4: the docs said 167 while the gate ran 169).
-  * Any query added to [[SparkEntry.queries]] without bumping
-  * [[SparkEntry.GatedQueryCount]] — or without updating every README
-  * mention — fails here. */
+/** Pins what the gate registry cannot guarantee by construction: README.md
+  * cites the live gate count (round-6 verdict item #4: the docs said 167
+  * while the gate ran 169), every oracle carries SQL, and a name declared
+  * twice is refused instead of silently shadowing a gate. */
 class QueryCountSpec extends AnyFunSuite {
 
-  test("queries registry matches the declared count") {
-    assert(SparkEntry.queries.size === SparkEntry.GatedQueryCount)
+  test("every query has an oracle (full DuckDB coverage, no rows-only checks)") {
+    val blank = SparkEntry.gates.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"gates with a blank DuckDB twin: ${blank.mkString(", ")}")
   }
 
-  test("every query has an oracle (full DuckDB coverage, no rows-only checks)") {
-    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+  test("a gate name declared twice fails at construction, naming the duplicate") {
+    val g = Gate("dup_gate", "SELECT 1", (_, _) => null)
+    val e = intercept[IllegalArgumentException](
+      Gate.registry(g, Gate("other_gate", "SELECT 2", g.build), g.copy(oracle = "SELECT 3")))
+    assert(e.getMessage.contains("dup_gate"))
+    assert(!e.getMessage.contains("other_gate"))
   }
 
   test("README cites the declared count, not a stale one") {
     val readme = java.nio.file.Files.readString(java.nio.file.Paths.get("README.md"))
-    val n = SparkEntry.GatedQueryCount
+    val n = SparkEntry.queries.size
     // EVERY "<number> operator queries" mention must carry the live count —
     // this subsumes the old ever-growing stale-figure blacklist: any figure
-    // other than the constant fails, including future ones
+    // other than the registry's fails, including future ones
     val mentions = raw"(\d+) operator queries".r
       .findAllMatchIn(readme).map(_.group(1).toInt).toSeq
     assert(mentions.nonEmpty, s"README.md must cite '$n operator queries'")
