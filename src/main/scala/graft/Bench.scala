@@ -168,6 +168,13 @@ object Bench {
     "_dedup_shared_materialize" -> SparkEntry.materializeDedupShared,
     "_ann_shared_materialize" -> SparkEntry.materializeAnnShared)
 
+  /** The lines a `SPARK_GRAFT_ONLY` filter names (all of them without
+    * one). Hooks and gates are filtered alike, so a filtered run builds
+    * only the hooks it names: name `_pipeline_materialize` to time it. */
+  private[graft] def selected[A](only: Option[Set[String]],
+      lines: Seq[(String, A)]): Seq[(String, A)] =
+    lines.filter { case (name, _) => only.forall(_.contains(name)) }
+
   private def errText(e: Throwable): String =
     s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
 
@@ -247,13 +254,13 @@ object Bench {
     // whole-stage compiler init) before any timer starts — they belong to
     // the JVM, not to whichever query happens to run first.
     spark.range(0, 1L << 20).selectExpr("sum(id)").collect()
-    val materialized = MaterializeHooks.map { case (name, hook) =>
+    val materialized = selected(only, MaterializeHooks).map { case (name, hook) =>
       timed(name)(hook(spark, sfDir)) }
-    // session-lived stage caches live in SparkEntry (never registered with
-    // RunHygiene); each query's own stage persists drain after its action so
+    // the session-lived shared frames are Shared entries (never registered
+    // with RunHygiene) — a filtered run's gates fill the ones they read on
+    // first use; each query's own stage persists drain after its action so
     // 70 queries don't accumulate storage churn
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val results = selected(only, SparkEntry.queries.toSeq.sortBy(_._1))
       .map { case (name, fn) =>
         val line = timed(name)(fn(spark, sfDir).count())
         RunHygiene.drainStages(spark)

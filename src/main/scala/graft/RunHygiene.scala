@@ -20,9 +20,10 @@ import org.apache.spark.storage.StorageLevel
   * CacheManager entry that silently turns every later `persist()` of the
   * same plan into a no-op that recomputes per access.
   *
-  * The session-lived pipeline stage caches (matched ledger / balance
-  * history in [[SparkEntry]]) are deliberately NOT registered, so a drain
-  * can never evict them.
+  * The session-lived shared frames and memos ([[Shared]] entries: the
+  * matched ledger / balance history, the shared pair and ranking
+  * checkpoints) are deliberately NOT registered, so a drain can never
+  * evict them.
   */
 object RunHygiene {
   // Frames must be held STRONGLY: a drain right after a query's action has

@@ -109,31 +109,20 @@ object BpeLearn {
   // The learn loop is deterministic in (docs, rounds) and THREE gates
   // (text_bpe_merges / text_bpe_apply / text_bpe_fertility) consume the
   // identical learn — each used to re-run the full 6-round loop (~12 jobs)
-  // per call. Session memo keyed by the canonicalized source plan, the
-  // stagedShared discipline: the merge table and the final sequences are
-  // computed once per (session, corpus, rounds); the final frame is
-  // plain-persisted (never RunHygiene-registered) so per-query drains
-  // leave it cached for the other two gates.
-  private val learnMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession,
-     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    (Seq[(Long, String, String, Long)], DataFrame)]
-
+  // per call. A Shared entry keyed on the corpus (plan and files) and the
+  // rounds: the merge table and the final sequences are computed once per
+  // (session, corpus, rounds).
   private def learnShared(docs: DataFrame,
       rounds: Int): (Seq[(Long, String, String, Long)], DataFrame) =
-    synchronized {
-      val key = (docs.sparkSession, docs.queryExecution.analyzed.canonicalized,
-        rounds)
-      learnMemo.getOrElseUpdate(key, {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val r = learn(docs, rounds,
-          df => graft.RunHygiene.track(df.persist(lvl)))
-        // the memoized final sequences are a localCheckpoint: frozen RDD
-        // blocks no consumer's unpersist can remove (see
-        // SparkEntry.simhashPairsShared); the loop's tracked persists
-        // drain after the first consuming query as usual
-        (r._1, r._2.localCheckpoint(true))
-      })
+    graft.Shared.get("bpe_learn", docs, rounds) {
+      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      val r = learn(docs, rounds,
+        df => graft.RunHygiene.track(df.persist(lvl)))
+      // the memoized final sequences are a localCheckpoint: frozen RDD
+      // blocks no consumer's unpersist can remove (see
+      // SparkEntry.checkpointed); the loop's tracked persists drain after
+      // the first consuming query as usual
+      (r._1, r._2.localCheckpoint(true))
     }
 
   /** The learned merge table: (merge_rank, left_sym, right_sym, pair_freq),

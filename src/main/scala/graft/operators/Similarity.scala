@@ -303,28 +303,18 @@ object Similarity {
     * unrolls the same Lloyd rounds in SQL) reproduce them bit-for-bit. A
     * corpus smaller than nCentroids yields fewer centroids, never phantom
     * all-zero cells (the oracle's init CTE only has the actual rows). */
-  // Session memo of the trained quantizer, keyed by the canonicalized
-  // corpus plan and the training parameters — SIX gates train the
-  // identical (corpus, nCentroids=8, iters=3) quantizer (ivf_topk,
-  // indexed build, kmeans, outlier screen, diversity sample, semantic
-  // dedup) and each re-ran the init + iters×(assign+means) job chain per
-  // call (optimization guide §1.2: compute-once). Same discipline as
-  // BpeLearn.learnShared (round-15, judged REAL): memo lives only for the
-  // session, so every bench/verify invocation still trains from the
-  // parquet inputs; scratch-tree reads (rebuild/recovery) key on their
-  // UUID paths and never false-hit. Driver state is nCentroids×dim floats
-  // per entry — model-sized.
-  private val lloydMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    IndexedSeq[Seq[Float]]]
-
-  private[operators] def lloydCentroids(emb: DataFrame, nCentroids: Int,
-      iters: Int): IndexedSeq[Seq[Float]] = lloydMemo.synchronized {
-    lloydMemo.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.analyzed.canonicalized, nCentroids, iters),
-      lloydTrain(emb, nCentroids, iters))
-  }
+  // A Shared entry (keyed on the session, the corpus plan and files, and
+  // the parameters): SIX gates train the identical (corpus, nCentroids=8,
+  // iters=3) quantizer (ivf_topk, indexed build, kmeans, outlier screen,
+  // diversity sample, semantic dedup) and each re-ran the init +
+  // iters×(assign+means) job chain per call (guide §1.2: compute-once).
+  // The entry lives only for the session, so every bench/verify run still
+  // trains from the parquet inputs; an appended corpus file or a UUID
+  // scratch path changes the key and retrains. Driver state is
+  // nCentroids×dim floats per entry — model-sized.
+  private[graft] def lloydCentroids(emb: DataFrame, nCentroids: Int,
+      iters: Int): IndexedSeq[Seq[Float]] =
+    graft.Shared.get("lloyd", emb, nCentroids, iters)(lloydTrain(emb, nCentroids, iters))
 
   private def lloydTrain(emb: DataFrame, nCentroids: Int,
       iters: Int): IndexedSeq[Seq[Float]] = {
@@ -508,20 +498,13 @@ object Similarity {
     * to the unbatched form and the DuckDB oracle renders the same
     * arithmetic. Driver state stays m × k × subDim floats — the MLlib
     * k-means shape. */
-  // Session memo, same contract as lloydMemo: pqCodes, pqTopK, and the
-  // recall harness all train the identical m×k codebook set over the same
-  // staged corpus — one training per (session, corpus plan, parameters).
-  private val pqBooksMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int, Int),
-    Seq[IndexedSeq[Seq[Float]]]]
-
+  // A Shared entry, same contract as lloydCentroids: pqCodes, pqTopK, and
+  // the recall harness all train the identical m×k codebook set over the
+  // same staged corpus — one training per (session, corpus, parameters).
   private def pqBooks(emb: DataFrame, m: Int, subDim: Int, k: Int,
-      iters: Int): Seq[IndexedSeq[Seq[Float]]] = pqBooksMemo.synchronized {
-    pqBooksMemo.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.analyzed.canonicalized, m, subDim, k, iters),
+      iters: Int): Seq[IndexedSeq[Seq[Float]]] =
+    graft.Shared.get("pq_books", emb, m, subDim, k, iters)(
       pqBooksTrain(emb, m, subDim, k, iters))
-  }
 
   private def pqBooksTrain(emb: DataFrame, m: Int, subDim: Int, k: Int,
       iters: Int): Seq[IndexedSeq[Seq[Float]]] = {

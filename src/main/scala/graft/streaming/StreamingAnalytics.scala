@@ -19,14 +19,10 @@ object StreamingAnalytics {
   // single-file writes; the rollup and sessions gates replay the SAME
   // events source, so they stage ONE 4-column chunk set (sentinel rows
   // carry both flush markers) and differ only in sink/checkpoint tag.
-  // Keyed by the source's canonicalized logical plan: two reads of the
-  // same table at the same dir canonicalize equal, different dirs (or
-  // tables) don't — the same per-(session, source) memoization SparkEntry
-  // uses for the matched-ledger stages.
-  private val chunkCache = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession,
-     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, String),
-    FileReplay.ReplayDirs]
+  // A graft.Shared entry keyed on the source frame: two reads of the same
+  // table at the same dir share it, different dirs (or tables, or an
+  // appended file) don't.
+  private val ChunkSetTag = "replay_chunks"
 
   /** `keyTag` separates chunk sets whose SOURCE plans canonicalize equal
     * but whose SENTINELS differ (the daily-window HDR gate needs +2 day
@@ -35,16 +31,12 @@ object StreamingAnalytics {
   private def stagedShared(src: DataFrame, batches: Int,
       sentinels: DataFrame => Seq[DataFrame],
       keyTag: String = ""): FileReplay.ReplayDirs =
-    synchronized {
-      val key = (src.sparkSession, src.queryExecution.analyzed.canonicalized,
-        batches, keyTag)
-      chunkCache.getOrElseUpdate(key,
-        FileReplay.stageChunks(src, "ts", batches, sentinels(src), ephemeral = false))
-    }
+    graft.Shared.get(ChunkSetTag, src, batches, keyTag)(
+      FileReplay.stageChunks(src, "ts", batches, sentinels(src), ephemeral = false))
 
-  /** Number of distinct staged chunk sets this session — visible to the
-    * spec that pins the rollup/sessions staging reuse. */
-  private[graft] def stagedChunkSets: Int = synchronized(chunkCache.size)
+  /** Number of distinct staged chunk sets held in the registry — visible
+    * to the spec that pins the rollup/sessions staging reuse. */
+  private[graft] def stagedChunkSets: Int = graft.Shared.keys.count(_.tag == ChunkSetTag)
 
   /** The union replay projection both event gates stream from. Missing
     * columns (unit-test frames carry only their gate's subset) are filled

@@ -13,7 +13,8 @@ import scala.sys.process._
   * artifact out of HEAD (`git show HEAD:<file>`) and scans that. Shape-based
   * patterns only (never a sensitive literal: "artifactory" alone is the
   * public product name; the adjudicated leak is the hostname AROUND it).
-  * Remedy on red: `python3 scripts/redact_artifacts.py`, commit, re-run.
+  * Remedy on red: `python3 scripts/round_open.py` (redacts and commits),
+  * re-run.
   */
 class ArtifactRedactionSpec extends AnyFunSuite {
 
@@ -47,7 +48,8 @@ class ArtifactRedactionSpec extends AnyFunSuite {
       m <- rx.findFirstIn(text)
     } yield s"HEAD:$name: ...${m.take(40)}..."
     assert(offenders.isEmpty,
-      s"un-redacted COMMITTED artifact hits (run scripts/redact_artifacts.py, commit):\n${offenders.mkString("\n")}")
+      s"un-redacted COMMITTED artifact hits (run `python3 scripts/round_open.py`, " +
+        s"which redacts and commits the artifacts):\n${offenders.mkString("\n")}")
   }
 
   test("committed LEAKCHECK.json stays at its canonical fixed point (no GITLOG re-growth)") {
@@ -57,9 +59,10 @@ class ArtifactRedactionSpec extends AnyFunSuite {
     // must stay small forever; a size blow-up means the fixed point broke.
     committedArtifacts().find(_._1 == "LEAKCHECK.json").foreach { case (_, text) =>
       assert(text.length < 65536,
-        s"committed LEAKCHECK.json is ${text.length} bytes — the GITLOG " +
-          "self-quote fixed point broke; check _canonicalize_leakcheck in " +
-          "scripts/redact_artifacts.py")
+        s"committed LEAKCHECK.json is ${text.length} bytes — run " +
+          "`python3 scripts/round_open.py`, which redacts and commits it; if " +
+          "it stays this size, the GITLOG self-quote fixed point broke (check " +
+          "_canonicalize_leakcheck in scripts/redact_artifacts.py)")
     }
   }
 

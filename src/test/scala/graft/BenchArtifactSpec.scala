@@ -26,6 +26,14 @@ class BenchArtifactSpec extends AnyFunSuite {
       errors: Seq[(String, String)] = Nil): String =
     Bench.renderFullJson(timings, warm, warmErrors, errors, env, "/root/testdata/sf0.1")
 
+  test("a filtered run builds only the materialize hooks it names") {
+    val hooks = Bench.MaterializeHooks
+    assert(Bench.selected(Some(Set("fifo_match", "q01_balance_asof")), hooks).isEmpty)
+    assert(Bench.selected(Some(Set("_pipeline_materialize", "fifo_match")), hooks)
+      .map(_._1) === Seq("_pipeline_materialize"))
+    assert(Bench.selected(None, hooks) === hooks)
+  }
+
   test("every grading key is present with the expected shape") {
     val js = render()
     for (key <- Seq("\"metric\":\"total\"", "\"value\":", "\"unit\":\"sec\"",
