@@ -26,7 +26,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    leaves no entry; the next get rebuilds.
   *  - '''Lifetime:''' every access first drops the entries whose
   *    SparkContext has stopped (the [[RunHygiene]] sweep rule). Nothing is
-  *    registered on a session that never uses the registry.
+  *    registered on a session that never uses the registry. An entry got
+  *    through [[latest]] also ends when the same input is rebuilt for a new
+  *    file listing.
   */
 object Shared {
 
@@ -44,6 +46,9 @@ object Shared {
         try value = Some(build) catch { case e: Throwable => failed = true; throw e }
       value
     }
+
+    /** The value if a build has finished (waits for a running one). */
+    def built: Option[Any] = synchronized(value)
   }
 
   private val cells = new ConcurrentHashMap[Key, Cell]()
@@ -51,10 +56,34 @@ object Shared {
   /** The value shared under (`tag`, `input`, `params`) in `input`'s
     * session, running `build` only if no live entry has that key. */
   def get[T](tag: String, input: DataFrame, params: Any*)(build: => T): T = {
-    val plan = input.queryExecution.analyzed
-    val key = Key(input.sparkSession, tag, params, plan.canonicalized, scannedFiles(plan))
     sweep()
+    getOrBuild(keyOf(tag, input, params), build).asInstanceOf[T]
+  }
+
+  /** [[get]] that keeps one entry per session, tag, parameters and input
+    * plan: before `build` runs for a new file listing of the same input
+    * roots (the next day's rewrite under one path), the entries built for
+    * the listings it replaces are dropped and their values handed to
+    * `release`. A session that re-reads a rewritten table then holds one
+    * value for it, not one per listing. Releasing first matters for
+    * persisted values: Spark's cache matches plans, not listings, so a new
+    * `persist()` of a plan still cached for the old listing would be
+    * served the old listing's rows. */
+  def latest[T](tag: String, input: DataFrame, params: Any*)(build: => T)(
+      release: T => Unit): T = {
+    sweep()
+    val key = keyOf(tag, input, params)
+    if (!cells.containsKey(key)) cells.forEach { (k, cell) =>
+      if (k.tag == tag && k.files != key.files && k.copy(files = key.files) == key &&
+          cells.remove(k, cell))
+        cell.built.foreach(old => release(old.asInstanceOf[T]))
+    }
     getOrBuild(key, build).asInstanceOf[T]
+  }
+
+  private def keyOf(tag: String, input: DataFrame, params: Seq[Any]): Key = {
+    val plan = input.queryExecution.analyzed
+    Key(input.sparkSession, tag, params, plan.canonicalized, scannedFiles(plan))
   }
 
   @annotation.tailrec

@@ -153,7 +153,8 @@ object ThrivePipeline {
       t.write.mode(SaveMode.Overwrite)
         .partitionBy("transaction_type")
         .parquet(s"$stagingRoot/transactions.parquet")
-      val staged = spark.read.parquet(s"$stagingRoot/transactions.parquet")
+      // read back with the schema just written: no schema-inference job
+      val staged = spark.read.schema(t.schema).parquet(s"$stagingRoot/transactions.parquet")
         .select(t.columns.map(col).toIndexedSeq: _*) // partition col back in canonical position
       (staged.count(), staged)
     }

@@ -105,6 +105,24 @@ class SharedSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("latest: a new listing of the same input releases and drops the entry it replaces") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_shared_latest_").toString
+    try {
+      val released = scala.collection.mutable.ArrayBuffer.empty[String]
+      def get(v: String) =
+        Shared.latest("spec_latest", spark.read.parquet(dir))(v)(released += _)
+      Seq(1).toDF("x").write.mode("overwrite").parquet(dir)
+      assert(get("first") === "first")
+      assert(get("unused") === "first", "the same listing must hit its entry")
+      Seq(2).toDF("x").write.mode("append").parquet(dir)
+      assert(get("second") === "second")
+      assert(released.toSeq === Seq("first"))
+      assert(Shared.keys.count(k => k.tag == "spec_latest" &&
+        k.files.exists(_._1.contains(dir))) === 1)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("a stopped session leaves zero entries (child JVM)") {
     // Stopping a context is process-wide, so the session is made, used,
     // and stopped in a child JVM on this test classpath.

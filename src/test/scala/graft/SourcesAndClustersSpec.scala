@@ -33,6 +33,23 @@ class SourcesAndClustersSpec extends AnyFunSuite {
     assert(bad.length === 1 && bad.head.isNullAt(2))
   }
 
+  test("every table reads with the schema parquet inference gives, in no Spark job") {
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val dir = s"/root/testdata/$sf"
+      val names = new java.io.File(dir).list().toSeq.filter(_.endsWith(".parquet"))
+        .map(_.stripSuffix(".parquet")).sorted
+      assert(names.contains("events"))
+      names.foreach { name =>
+        val group = s"table_schema_${sf}_$name"
+        spark.sparkContext.setJobGroup(group, name)
+        val read = try Tables.table(spark, dir, name) finally spark.sparkContext.clearJobGroup()
+        assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+          s"$sf/$name: reading the table ran a Spark job")
+        assert(read.schema === spark.read.parquet(s"$dir/$name.parquet").schema, s"$sf/$name")
+      }
+    }
+  }
+
   test("dedup clusters: min-label propagation finds connected components") {
     import spark.implicits._
     // chain 1-2-3, pair 10-11, isolated pairs via transitive closure
