@@ -1,10 +1,20 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, Future, Promise, TimeoutException}
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
+import graft.Shared
 import graft.operators.{BalanceAnalytics, FifoMatcher, Validators}
 import graft.sources.Tables
+import graft.streaming.ReplayFileSystem
 
 /** End-to-end pipeline — the Spark re-expression of the reference's 6-task
   * Airflow DAG (reference: src/thrive_cash_processing_dag.py:50-738):
@@ -19,12 +29,24 @@ import graft.sources.Tables
   *
   * Scale notes: every stage is a declarative plan — the only driver-side
   * materializations are validation error samples (limited) and the one-row
-  * report aggregates. Single-file CSV is a deliberate contract cost,
-  * isolated here (`coalesce(1)` on final, already-reduced outputs only).
-  * The two persisted stage frames (`matched`, `history`) are sized by AQE
-  * from the bytes seen at run time, not by `spark.sql.shuffle.partitions`
-  * (`Tables.ensureConf` lets AQE coalesce cached plans), so later jobs scan
-  * and the matched parquet deliverable holds a handful of partitions.
+  * report aggregates.
+  *  - '''One exchange.''' The staged ledger is range-partitioned on
+  *    `customer_id` once ([[frames]]); every per-customer step after it
+  *    (the matcher's two windows, the balance and current-balance windows,
+  *    the matched and history sorts) runs as a local sort over that one
+  *    exchange, which AQE sizes from its bytes (`Tables.ensureConf` lets AQE
+  *    coalesce cached plans), not by `spark.sql.shuffle.partitions`.
+  *  - '''Cached stage frames.''' `matched`, `history` and `current` are
+  *    persisted; one parallel job over `current` fills the last two.
+  *  - '''Joined sinks.''' Single-file CSV is a deliberate contract cost
+  *    (`coalesce(1)` on final outputs only): each CSV starts on its own
+  *    thread once its frame is cached, so its one-task encode overlaps the
+  *    run's parallel jobs, and all are joined, within
+  *    [[graft.Shared.BuildDeadline]], before `analytics_report.json` is
+  *    written. Frames and sinks are released on every exit path.
+  *  - '''Local trees in-process.''' A staging or output directory without a
+  *    scheme is written through [[graft.streaming.ReplayFileSystem]] (same
+  *    files, no `chmod` child processes).
   */
 object ThrivePipeline {
 
@@ -130,14 +152,90 @@ object ThrivePipeline {
   private def writeSingleCsv(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
+  /** The run's three per-customer frames over the staged ledger, not yet
+    * persisted. One range exchange on `customer_id` serves all of them:
+    * it satisfies the matcher's two windows, the balance and current-balance
+    * windows (each clustered on the customer) and the two sorts (a range
+    * partitioning on a prefix of a sort key satisfies the whole key's
+    * ordering), so Catalyst plans each of those as a local sort. */
+  private[graft] def frames(staged: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val matched = FifoMatcher.matchTransactions(staged.repartitionByRange(col("customer_id")))
+      .orderBy("CUSTOMERID", "CREATEDAT", "TRANS_ID")
+    val history = BalanceAnalytics.balanceHistory(matched)
+      .orderBy("customer_id", "transaction_date", "transaction_id")
+    (matched, history, BalanceAnalytics.currentBalances(history))
+  }
+
+  /** `dir` as Spark gets it: a path without a scheme is a local tree, handed
+    * over as its [[ReplayFileSystem]] URI so Hadoop's permission calls run
+    * in-process instead of as `chmod` child processes; any other scheme is
+    * left as it is. */
+  private def sparkPath(spark: SparkSession, dir: String): String =
+    if (new Path(dir).toUri.getScheme != null) dir
+    else { ReplayFileSystem.register(spark); ReplayFileSystem.uri(Paths.get(dir)) }
+
+  /** What one run holds: the frames it persisted and the CSV sinks it
+    * started. [[run]] releases both on every exit path. */
+  private final class Held {
+    private val persisted = ArrayBuffer.empty[DataFrame]
+    private val sinks = ArrayBuffer.empty[(String, Future[Unit])]
+    private lazy val deadline = Shared.BuildDeadline.fromNow
+
+    def persist(df: DataFrame): Unit =
+      persisted += df.persist(StorageLevel.MEMORY_AND_DISK)
+
+    /** Start the single-file CSV of `df` at `path` on a thread of its own.
+      * A new thread inherits the caller's Spark local properties (job
+      * group, scheduler pool), so its jobs are attributed like the run's. */
+    def sinkCsv(df: DataFrame, path: String): Unit = {
+      val done = Promise[Unit]()
+      val t = new Thread(() => done.complete(Try(writeSingleCsv(df, path))), "pipeline-sink")
+      t.setDaemon(true)
+      t.start()
+      sinks += path -> done.future
+    }
+
+    /** Wait for every sink in start order, up to [[Shared.BuildDeadline]]:
+      * the first failure propagates, and a sink still running at the
+      * deadline fails the wait with its path. */
+    def joinSinks(): Unit = sinks.foreach { case (path, f) =>
+      try Await.result(f, deadline.timeLeft)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          s"pipeline sink still running after ${Shared.BuildDeadline}: $path")
+      }
+    }
+
+    /** Let the sinks end (they read the cache), then unpersist, dependents
+      * first: unpersisting a frame that a cached frame still reads would
+      * re-plan the dependent's cache entry. */
+    def release(): Unit = {
+      sinks.foreach { case (_, f) => Try(Await.ready(f, deadline.timeLeft)) }
+      persisted.reverseIterator.foreach(_.unpersist())
+    }
+  }
+
   def run(spark: SparkSession, sourceDir: String, cfg: Config): RunReport = {
-    val stages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
+    val held = new Held
+    try {
+      val report = runStages(spark, sourceDir, cfg, held)
+      held.joinSinks()
+      if (report.status == "success")
+        Files.writeString(Paths.get(s"${cfg.outputDir}/analytics_report.json"), report.toJson)
+      report
+    } finally held.release()
+  }
+
+  private def runStages(spark: SparkSession, sourceDir: String, cfg: Config,
+      held: Held): RunReport = {
+    val stages = ArrayBuffer.empty[StageResult]
     def stage[T](name: String)(f: => (Long, T)): T = {
       val t0 = System.nanoTime()
       val (rows, out) = f
       stages += StageResult(name, rows, (System.nanoTime() - t0) / 1e9)
       out
     }
+    val outputDir = sparkPath(spark, cfg.outputDir)
 
     // Stage 1 — ingest: derive canonical transactions, stage them under the
     // per-execution-date namespace split by type (the reference's
@@ -146,8 +244,10 @@ object ThrivePipeline {
     // write.partitionBy lays out transaction_type=earned/spent/expired
     // directories in a single pass — the previous one-filtered-write-per-type
     // form scanned the source three times. Overwrite keeps same-day reruns
-    // idempotent (the DAG's restartability contract, :631-636).
-    val stagingRoot = s"${cfg.stagingDir}/${cfg.executionDate}"
+    // idempotent (the DAG's restartability contract, :631-636). Its row
+    // count is validate_source's `row_count` over the same staged frame,
+    // filled in below.
+    val stagingRoot = s"${sparkPath(spark, cfg.stagingDir)}/${cfg.executionDate}"
     val txns = stage("ingest") {
       val t = Tables.transactions(spark, sourceDir)
       t.write.mode(SaveMode.Overwrite)
@@ -156,7 +256,7 @@ object ThrivePipeline {
       // read back with the schema just written: no schema-inference job
       val staged = spark.read.schema(t.schema).parquet(s"$stagingRoot/transactions.parquet")
         .select(t.columns.map(col).toIndexedSeq: _*) // partition col back in canonical position
-      (staged.count(), staged)
+      (0L, staged)
     }
 
     // Stage 2 — validate_source: V1-V5, fail fast (reference :161-226);
@@ -174,21 +274,22 @@ object ThrivePipeline {
         s"$k=${q.getAs[Long](k)} (first ${samples(k).size}: ${samples(k).mkString(", ")})")
       (q.getAs[Long]("row_count"), errs)
     }
+    stages(0) = stages(0).copy(rows = stages(1).rows)
     if (sourceErrors.nonEmpty)
       return failed(stages.toSeq, sourceErrors.map("source validation: " + _))
 
     // Stage 3 — fifo matching + dual-format sinks (reference :229-286)
     // The matched row count is taken once here and reused by the next two
     // stage rows: validation only reads `matched`, and the balance history is
-    // a 1:1 projection of it.
-    val (matched, matchedRows) = stage("fifo_match") {
-      val m = FifoMatcher.matchTransactions(txns)
-        .orderBy("CUSTOMERID", "CREATEDAT", "TRANS_ID")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      writeParquet(m, s"${cfg.outputDir}/tc_data_with_redemptions.parquet")
-      writeSingleCsv(m, s"${cfg.outputDir}/tc_data_with_redemptions.csv")
-      val n = m.count()
-      (n, (m, n))
+    // a 1:1 projection of it. The parquet write fills the cache; the CSV
+    // then encodes cached rows while validation runs.
+    val (matched, history, current) = frames(txns)
+    val matchedRows = stage("fifo_match") {
+      held.persist(matched)
+      writeParquet(matched, s"$outputDir/tc_data_with_redemptions.parquet")
+      held.sinkCsv(matched, s"$outputDir/tc_data_with_redemptions.csv")
+      val n = matched.count()
+      (n, n)
     }
 
     // Stage 4 — validate_results: V6-V11 (reference :289-423)
@@ -198,17 +299,20 @@ object ThrivePipeline {
           .collect().map(_.getString(0))
         s"first ${ids.length}: ${ids.mkString(", ")}"
       }
-      val errs = scala.collection.mutable.ArrayBuffer.empty[String]
+      val errs = ArrayBuffer.empty[String]
       val badRefDf = Validators.invalidRedeemIds(matched)
       val badRefs = badRefDf.count()
       if (badRefs > 0)
         errs += s"invalid REDEEMIDs: $badRefs (${sampleIds(badRefDf, "REDEEMID")})"
-      val unbalancedDf = Validators.balanceEquation(matched, cfg.tolerance)
-        .filter(!col("balanced"))
-      val unbalanced = unbalancedDf.count()
-      if (unbalanced > 0 && cfg.failOnBalanceMismatch)
-        errs += s"balance equation mismatches: $unbalanced customers " +
-          s"(${sampleIds(unbalancedDf, "customer_id")})"
+      // V8 is counted only where it can fail the run; nothing else reads it
+      if (cfg.failOnBalanceMismatch) {
+        val unbalancedDf = Validators.balanceEquation(matched, cfg.tolerance)
+          .filter(!col("balanced"))
+        val unbalanced = unbalancedDf.count()
+        if (unbalanced > 0)
+          errs += s"balance equation mismatches: $unbalanced customers " +
+            s"(${sampleIds(unbalancedDf, "customer_id")})"
+      }
       if (cfg.strictChronology) {
         val chronoDf = Validators.chronologyViolations(matched)
         val chrono = chronoDf.count()
@@ -219,20 +323,22 @@ object ThrivePipeline {
     }
     if (resultErrors.nonEmpty) return failed(stages.toSeq, resultErrors)
 
-    // Stage 5 — analytics: history, current balances, report (reference :426-560)
-    val (history, current) = stage("build_analytics") {
-      val h = BalanceAnalytics.balanceHistory(matched)
-        .orderBy("customer_id", "transaction_date", "transaction_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val c = BalanceAnalytics.currentBalances(h)
-      writeSingleCsv(h, s"${cfg.outputDir}/customer_balance_history.csv")
-      writeSingleCsv(c, s"${cfg.outputDir}/customer_current_balances.csv")
-      (matchedRows, (h, c))
+    // Stage 5 — analytics: history, current balances, report (reference
+    // :426-560). One job over `current` fills both caches; each CSV then
+    // encodes cached rows on its own thread while the report runs.
+    stage("build_analytics") {
+      held.persist(history)
+      held.persist(current)
+      current.count()
+      held.sinkCsv(history, s"$outputDir/customer_balance_history.csv")
+      held.sinkCsv(current, s"$outputDir/customer_current_balances.csv")
+      (matchedRows, ())
     }
 
     // Stage 6 — report + alert (reference :518-542, :563-598; unified keys).
     // top_customers_by_balance embeds the nlargest(10) records (:532-537);
     // topBalances plans as TakeOrderedAndProject, so this collect is ≤10 rows.
+    // [[run]] writes the JSON document once every sink has finished.
     val summary = BalanceAnalytics.reportSummary(matched, current).collect().head
     val topCustomers = BalanceAnalytics.topBalances(current).collect().toSeq.map(r =>
       TopCustomer(
@@ -241,7 +347,7 @@ object ThrivePipeline {
         r.getAs[Double]("cumulative_earned"),
         r.getAs[Double]("cumulative_spent"),
         r.getAs[Double]("cumulative_expired")))
-    val report = RunReport(
+    RunReport(
       status = "success",
       stages = stages.toSeq,
       validationErrors = Seq.empty,
@@ -258,12 +364,6 @@ object ThrivePipeline {
         s"${summary.getAs[Long]("matching_records_count")} matched, " +
         s"${summary.getAs[Long]("total_customers")} customers",
       topCustomers = topCustomers)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${cfg.outputDir}/analytics_report.json"),
-      report.toJson)
-    history.unpersist()
-    matched.unpersist()
-    report
   }
 
   private def failed(stages: Seq[StageResult], errors: Seq[String]): RunReport =

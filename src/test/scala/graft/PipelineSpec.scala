@@ -136,9 +136,17 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("ts", col("ts").cast("timestamp_ntz"))
     events.write.parquet(s"$tmp/src/events.parquet")
 
+    // a run releases what it persisted on every exit path, failures included
+    // the session cache's entry count (numCachedEntries is private[sql])
+    def cached(): Int = {
+      val cm = spark.sharedState.cacheManager
+      cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+    }
+    val cachedBefore = cached()
     val strict = ThrivePipeline.run(spark, s"$tmp/src",
       ThrivePipeline.Config.strictParity(s"$tmp/staging", s"$tmp/out", "20260813"))
     assert(strict.status === "failed")
+    assert(cached() === cachedBefore, "the failed run left frames cached")
     assert(strict.alertMessage.contains("FAILED"))
     assert(strict.validationErrors.exists(e =>
       e.contains("balance equation mismatches: 1") && e.contains("C1") && !e.contains("C2")),
@@ -148,6 +156,7 @@ class PipelineSpec extends AnyFunSuite {
     val lenient = ThrivePipeline.run(spark, s"$tmp/src",
       ThrivePipeline.Config(s"$tmp/staging2", s"$tmp/out2", "20260813"))
     assert(lenient.status === "success")
+    assert(cached() === cachedBefore, "the successful run left frames cached")
   }
 
   test("source validation failures carry first-10 offending transaction ids") {
