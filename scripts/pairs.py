@@ -3,12 +3,13 @@
 
 Usage:
   python3 scripts/pairs.py --parent <dir> --change <dir> --workload daily_batch \
-      --seed 1 --pairs 10 [--seconds 10] [--out pairs.json]
+      --seed 1 --pairs 10
 
-Each pair runs `python3 finbench/run.py --workload W --seed S --seconds N`
-once in each checkout (its own build, inputs and run directory), the side
-that goes first alternating from pair to pair, so a slow period of the
-machine falls on both sides alike. Then, per end-to-end metric, it prints:
+Each pair runs the benchmark's command (`python3 finbench/run.py --workload W
+--seed S --seconds N`, N being its `run_seconds`) once in each checkout (its
+own build, inputs and run directory), the side that goes first alternating
+from pair to pair, so a slow period of the machine falls on both sides
+alike. Then, per end-to-end metric, it prints:
 
   - each side's median and quartiles (statistics.quantiles, n=4);
   - the parent's interquartile range (IQR);
@@ -17,10 +18,11 @@ machine falls on both sides alike. Then, per end-to-end metric, it prints:
     and its median is better than the parent's by more than the parent's
     IQR.
 
-A metric's better direction is read from `BENCHMARK.json` in the change's
-checkout (`end_to_end[].better`); a metric not listed there counts as better
-when lower, unless its name ends in `_per_s`. The script only runs the
-benchmark's command; it reads nothing else of it.
+The command, `run_seconds` and each metric's better direction
+(`end_to_end[].better`) are read from `BENCHMARK.json` in the change's
+checkout; the script stops with an error if that file or the entry of a
+metric a run prints is missing. It only runs the benchmark's command; it
+reads nothing else of it.
 """
 import argparse
 import json
@@ -30,23 +32,32 @@ import subprocess
 import sys
 
 
-def run_once(root, a):
-    cmd = ["python3", "finbench/run.py", "--workload", a.workload, "--seed", str(a.seed),
-           "--seconds", str(a.seconds)]
+def run_once(root, bench, a):
+    cmd = bench["command"] + ["--workload", a.workload, "--seed", str(a.seed),
+                              "--seconds", str(bench["run_seconds"])]
     r = subprocess.run(cmd, cwd=root, text=True, stdout=subprocess.PIPE,
                        stdin=subprocess.DEVNULL)
     lines = [x for x in r.stdout.splitlines() if x.startswith("{")]
     if r.returncode != 0 or not lines:
         sys.exit(f"pairs.py: {' '.join(cmd)} failed in {root} (exit {r.returncode})")
-    return json.loads(lines[-1])
+    result = json.loads(lines[-1])
+    unlisted = sorted(set(result["metrics"]) - set(bench["better"]))
+    if unlisted:
+        sys.exit(f"pairs.py: no end_to_end entry in the change's BENCHMARK.json for "
+                 f"{', '.join(unlisted)}")
+    return result
 
 
-def directions(root):
+def load_benchmark(root):
+    path = os.path.join(root, "BENCHMARK.json")
     try:
-        with open(os.path.join(root, "BENCHMARK.json")) as f:
-            return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
-    except (OSError, KeyError, ValueError):
-        return {}
+        with open(path) as f:
+            b = json.load(f)
+        return {"command": b["command"], "run_seconds": b["run_seconds"],
+                "better": {m["name"]: m["better"] for m in b["end_to_end"]}}
+    except (OSError, KeyError, TypeError, ValueError) as e:
+        sys.exit(f"pairs.py: cannot read the command, run_seconds and end_to_end "
+                 f"directions from {path}: {e!r}")
 
 
 def quartiles(xs):
@@ -63,26 +74,20 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=int, default=10)
-    ap.add_argument("--out", help="also write every run's result line to this JSON file")
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    bench = load_benchmark(sides["change"])
 
     runs = {"parent": [], "change": []}
     for i in range(a.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            r = run_once(sides[side], a)
+            r = run_once(sides[side], bench, a)
             runs[side].append(r)
             shown = {k: v["value"] for k, v in r["metrics"].items()}
             print(f"pair {i + 1}/{a.pairs} {side}: correct={r['correct']} "
                   f"failed={r['failed']}/{r['attempted']} {json.dumps(shown)}",
                   file=sys.stderr, flush=True)
-    if a.out:
-        with open(a.out, "w") as f:
-            json.dump({"args": vars(a), "runs": runs}, f, indent=1)
-
-    better = directions(sides["change"])
     n = a.pairs
     print(f"{a.workload} seed {a.seed}, {n} pairs; "
           f"failed ops parent {sum(r['failed'] for r in runs['parent'])}, "
@@ -96,7 +101,7 @@ def main():
     for name in runs["parent"][0]["metrics"]:
         p = [r["metrics"][name]["value"] for r in runs["parent"]]
         c = [r["metrics"][name]["value"] for r in runs["change"]]
-        lower = better.get(name, "higher" if name.endswith("_per_s") else "lower") == "lower"
+        lower = bench["better"][name] == "lower"
         wins = sum((cv < pv) if lower else (cv > pv) for pv, cv in zip(p, c))
         pq, cq = quartiles(p), quartiles(c)
         iqr = pq[2] - pq[0]

@@ -2,7 +2,9 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.concurrent.{Await, ExecutionContext, Future, Promise, TimeoutException}
 import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -122,22 +124,55 @@ object Shared {
     * diagnostic. The longest shared build takes about 20 s at sf0.1. */
   val BuildDeadline: FiniteDuration = 30.minutes
 
+  /** Work running under a name, started by [[startThread]] or
+    * [[buildConcurrently]] and waited for by [[awaitAll]]. `done` completes
+    * with the work's outcome, a fatal throwable included, so a waiter sees
+    * every failure at once instead of at its deadline. */
+  final class Running private[Shared] (val name: String) {
+    private val promise = Promise[Unit]()
+    def done: Future[Unit] = promise.future
+
+    private[Shared] def body(work: () => Any): Runnable = () =>
+      try { work(); promise.success(()) }
+      catch { case t: Throwable => promise.failure(t); if (!NonFatal(t)) throw t }
+  }
+
+  /** Start `work` under `name` on a new daemon thread. A new thread
+    * inherits the caller's Spark local properties (job group, scheduler
+    * pool), so its jobs are attributed like the caller's; a pooled thread
+    * keeps those of whichever thread created it. */
+  def startThread(name: String)(work: => Any): Running = {
+    val r = new Running(name)
+    val t = new Thread(r.body(() => work), name)
+    t.setDaemon(true)
+    t.start()
+    r
+  }
+
+  /** Wait for all of `work` until `deadline`. A failure propagates; work
+    * still running at the deadline fails the wait with an
+    * IllegalStateException that names it after `what`. */
+  def awaitAll(work: Seq[Running], deadline: Deadline, what: String): Unit = {
+    implicit val ec: ExecutionContext = ExecutionContext.parasitic
+    try Await.result(Future.sequence(work.map(_.done)), deadline.timeLeft)
+    catch {
+      case _: TimeoutException =>
+        val stuck = work.collect { case r if !r.done.isCompleted => r.name }
+        throw new IllegalStateException(s"$what: ${stuck.mkString(", ")}")
+    }
+  }
+
   /** Run independent named builds concurrently and wait for all of them
     * (guide §2.6: each build's task tail backfills the others' idle
     * cores). A failure propagates; a build still running at `deadline`
     * fails the wait with an error that names it. */
   def buildConcurrently(builds: Seq[(String, () => Any)],
       deadline: FiniteDuration = BuildDeadline): Unit = {
-    import scala.concurrent.{Await, Future, TimeoutException}
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val running = builds.map { case (name, b) => name -> Future(b()) }
-    try Await.result(Future.sequence(running.map(_._2)), deadline)
-    catch {
-      case _: TimeoutException =>
-        val stuck = running.collect { case (n, f) if !f.isCompleted => n }
-        throw new IllegalStateException(
-          s"shared builds still running after $deadline: ${stuck.mkString(", ")}")
+    val running = builds.map { case (name, b) =>
+      val r = new Running(name)
+      ExecutionContext.global.execute(r.body(b))
+      r
     }
+    awaitAll(running, deadline.fromNow, s"shared builds still running after $deadline")
   }
 }

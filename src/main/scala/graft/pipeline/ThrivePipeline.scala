@@ -3,7 +3,6 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.concurrent.{Await, Future, Promise, TimeoutException}
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
@@ -40,10 +39,11 @@ import graft.streaming.ReplayFileSystem
   *    persisted; one parallel job over `current` fills the last two.
   *  - '''Joined sinks.''' Single-file CSV is a deliberate contract cost
   *    (`coalesce(1)` on final outputs only): each CSV starts on its own
-  *    thread once its frame is cached, so its one-task encode overlaps the
-  *    run's parallel jobs, and all are joined, within
-  *    [[graft.Shared.BuildDeadline]], before `analytics_report.json` is
-  *    written. Frames and sinks are released on every exit path.
+  *    thread once its frame is cached, so its one task encodes cached rows
+  *    while the run's parallel jobs use the other cores, and all are
+  *    joined, within [[graft.Shared.BuildDeadline]], before
+  *    `analytics_report.json` is written. Every exit path joins the sinks
+  *    and unpersists the run's frames.
   *  - '''Local trees in-process.''' A staging or output directory without a
   *    scheme is written through [[graft.streaming.ReplayFileSystem]] (same
   *    files, no `chmod` child processes).
@@ -174,65 +174,42 @@ object ThrivePipeline {
     if (new Path(dir).toUri.getScheme != null) dir
     else { ReplayFileSystem.register(spark); ReplayFileSystem.uri(Paths.get(dir)) }
 
-  /** What one run holds: the frames it persisted and the CSV sinks it
-    * started. [[run]] releases both on every exit path. */
-  private final class Held {
-    private val persisted = ArrayBuffer.empty[DataFrame]
-    private val sinks = ArrayBuffer.empty[(String, Future[Unit])]
-    private lazy val deadline = Shared.BuildDeadline.fromNow
-
-    def persist(df: DataFrame): Unit =
-      persisted += df.persist(StorageLevel.MEMORY_AND_DISK)
-
-    /** Start the single-file CSV of `df` at `path` on a thread of its own.
-      * A new thread inherits the caller's Spark local properties (job
-      * group, scheduler pool), so its jobs are attributed like the run's. */
-    def sinkCsv(df: DataFrame, path: String): Unit = {
-      val done = Promise[Unit]()
-      val t = new Thread(() => done.complete(Try(writeSingleCsv(df, path))), "pipeline-sink")
-      t.setDaemon(true)
-      t.start()
-      sinks += path -> done.future
-    }
-
-    /** Wait for every sink in start order, up to [[Shared.BuildDeadline]]:
-      * the first failure propagates, and a sink still running at the
-      * deadline fails the wait with its path. */
-    def joinSinks(): Unit = sinks.foreach { case (path, f) =>
-      try Await.result(f, deadline.timeLeft)
-      catch {
-        case _: TimeoutException => throw new IllegalStateException(
-          s"pipeline sink still running after ${Shared.BuildDeadline}: $path")
-      }
-    }
-
-    /** Let the sinks end (they read the cache), then unpersist, dependents
-      * first: unpersisting a frame that a cached frame still reads would
-      * re-plan the dependent's cache entry. */
-    def release(): Unit = {
-      sinks.foreach { case (_, f) => Try(Await.ready(f, deadline.timeLeft)) }
-      persisted.reverseIterator.foreach(_.unpersist())
-    }
-  }
-
   def run(spark: SparkSession, sourceDir: String, cfg: Config): RunReport = {
-    val held = new Held
-    try {
-      val report = runStages(spark, sourceDir, cfg, held)
-      held.joinSinks()
-      if (report.status == "success")
-        Files.writeString(Paths.get(s"${cfg.outputDir}/analytics_report.json"), report.toJson)
-      report
-    } finally held.release()
+    val persisted = ArrayBuffer.empty[DataFrame]
+    val sinks = ArrayBuffer.empty[Shared.Running]
+    lazy val deadline = Shared.BuildDeadline.fromNow
+    def persist(df: DataFrame): Unit = persisted += df.persist(StorageLevel.MEMORY_AND_DISK)
+    def sinkCsv(df: DataFrame, path: String): Unit =
+      sinks += Shared.startThread(path)(writeSingleCsv(df, path))
+    def joinSinks(): Unit = Shared.awaitAll(sinks.toSeq, deadline,
+      s"pipeline sinks still writing after ${Shared.BuildDeadline}, their frames left cached")
+    val report =
+      try runStages(spark, sourceDir, cfg, persist, sinkCsv)
+      finally {
+        // The sinks read the cache: let them end first (a stage's error wins
+        // over theirs), then unpersist dependents first, since unpersisting a
+        // frame that a cached frame still reads would re-plan the dependent's
+        // cache entry. A sink still writing at the deadline keeps its frames.
+        Try(joinSinks())
+        if (sinks.forall(_.done.isCompleted)) persisted.reverseIterator.foreach(_.unpersist())
+      }
+    joinSinks() // done or past the deadline: raises a sink's failure at once
+    if (report.status == "success")
+      Files.writeString(Paths.get(s"${cfg.outputDir}/analytics_report.json"), report.toJson)
+    report
   }
 
   private def runStages(spark: SparkSession, sourceDir: String, cfg: Config,
-      held: Held): RunReport = {
+      persist: DataFrame => Unit, sinkCsv: (DataFrame, String) => Unit): RunReport = {
     val stages = ArrayBuffer.empty[StageResult]
-    def stage[T](name: String)(f: => (Long, T)): T = {
+    def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
-      val (rows, out) = f
-      stages += StageResult(name, rows, (System.nanoTime() - t0) / 1e9)
+      val out = f
+      (out, (System.nanoTime() - t0) / 1e9)
+    }
+    def stage[T](name: String)(f: => (Long, T)): T = {
+      val ((rows, out), seconds) = timed(f)
+      stages += StageResult(name, rows, seconds)
       out
     }
     val outputDir = sparkPath(spark, cfg.outputDir)
@@ -245,24 +222,22 @@ object ThrivePipeline {
     // directories in a single pass — the previous one-filtered-write-per-type
     // form scanned the source three times. Overwrite keeps same-day reruns
     // idempotent (the DAG's restartability contract, :631-636). Its row
-    // count is validate_source's `row_count` over the same staged frame,
-    // filled in below.
+    // count is validate_source's `row_count` over the same staged frame.
     val stagingRoot = s"${sparkPath(spark, cfg.stagingDir)}/${cfg.executionDate}"
-    val txns = stage("ingest") {
+    val (txns, ingestSeconds) = timed {
       val t = Tables.transactions(spark, sourceDir)
       t.write.mode(SaveMode.Overwrite)
         .partitionBy("transaction_type")
         .parquet(s"$stagingRoot/transactions.parquet")
       // read back with the schema just written: no schema-inference job
-      val staged = spark.read.schema(t.schema).parquet(s"$stagingRoot/transactions.parquet")
+      spark.read.schema(t.schema).parquet(s"$stagingRoot/transactions.parquet")
         .select(t.columns.map(col).toIndexedSeq: _*) // partition col back in canonical position
-      (0L, staged)
     }
 
     // Stage 2 — validate_source: V1-V5, fail fast (reference :161-226);
     // failed checks carry the first-10 offending transaction ids
     // (reference :651-655 "first 10 shown")
-    val sourceErrors = stage("validate_source") {
+    val ((rowCount, sourceErrors), sourceSeconds) = timed {
       val q = Validators.sourceQuality(txns).collect().head
       val failedChecks = Seq(
         "null_transaction_id", "null_customer_id", "null_amount",
@@ -274,7 +249,8 @@ object ThrivePipeline {
         s"$k=${q.getAs[Long](k)} (first ${samples(k).size}: ${samples(k).mkString(", ")})")
       (q.getAs[Long]("row_count"), errs)
     }
-    stages(0) = stages(0).copy(rows = stages(1).rows)
+    stages += StageResult("ingest", rowCount, ingestSeconds)
+    stages += StageResult("validate_source", rowCount, sourceSeconds)
     if (sourceErrors.nonEmpty)
       return failed(stages.toSeq, sourceErrors.map("source validation: " + _))
 
@@ -285,9 +261,9 @@ object ThrivePipeline {
     // then encodes cached rows while validation runs.
     val (matched, history, current) = frames(txns)
     val matchedRows = stage("fifo_match") {
-      held.persist(matched)
+      persist(matched)
       writeParquet(matched, s"$outputDir/tc_data_with_redemptions.parquet")
-      held.sinkCsv(matched, s"$outputDir/tc_data_with_redemptions.csv")
+      sinkCsv(matched, s"$outputDir/tc_data_with_redemptions.csv")
       val n = matched.count()
       (n, n)
     }
@@ -324,14 +300,14 @@ object ThrivePipeline {
     if (resultErrors.nonEmpty) return failed(stages.toSeq, resultErrors)
 
     // Stage 5 — analytics: history, current balances, report (reference
-    // :426-560). One job over `current` fills both caches; each CSV then
-    // encodes cached rows on its own thread while the report runs.
+    // :426-560). One parallel job over `current` fills both caches; each
+    // CSV then encodes cached rows on its own thread while the report runs.
     stage("build_analytics") {
-      held.persist(history)
-      held.persist(current)
+      persist(history)
+      persist(current)
       current.count()
-      held.sinkCsv(history, s"$outputDir/customer_balance_history.csv")
-      held.sinkCsv(current, s"$outputDir/customer_current_balances.csv")
+      sinkCsv(history, s"$outputDir/customer_balance_history.csv")
+      sinkCsv(current, s"$outputDir/customer_current_balances.csv")
       (matchedRows, ())
     }
 

@@ -15,7 +15,7 @@ import graft.operators.Similarity
 /** The [[Shared]] registry's rules: one build per key, per-key locks
   * (independent and nested builds do not wait on each other), no entry
   * after a failed build, keys that see appended input files, no entry left
-  * by a stopped session, and a bounded wait on concurrent builds. */
+  * by a stopped session, and a bounded wait on concurrent work. */
 class SharedSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -150,6 +150,29 @@ class SharedSpec extends AnyFunSuite {
       assert(e.getMessage.contains("stuck_build"), e.getMessage)
       assert(!e.getMessage.contains("quick_build"), e.getMessage)
     } finally latch.countDown()
+  }
+
+  test("a fatal throwable in started work fails the wait at once, not at its deadline") {
+    val t0 = System.nanoTime()
+    // a Future boxes a fatal throwable in an ExecutionException
+    val e = intercept[java.util.concurrent.ExecutionException] {
+      Shared.awaitAll(Seq(
+        Shared.startThread("fatal_work")(throw new LinkageError("probe"))),
+        10.minutes.fromNow, "work still running")
+    }
+    assert(e.getCause.isInstanceOf[LinkageError] && e.getCause.getMessage === "probe", e)
+    assert((System.nanoTime() - t0).nanos < 1.minute)
+  }
+
+  test("startThread runs its work with the caller's Spark local properties") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.probe", "caller")
+    try {
+      @volatile var seen: String = null
+      Shared.awaitAll(Seq(Shared.startThread("probe") { seen = sc.getLocalProperty("graft.probe") }),
+        1.minute.fromNow, "probe still running")
+      assert(seen === "caller")
+    } finally sc.setLocalProperty("graft.probe", null)
   }
 }
 
